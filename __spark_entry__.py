@@ -24,6 +24,7 @@ from platypus_ingestion_plugins_spark.operators import asof, cdc, chat, dedup, m
 from platypus_ingestion_plugins_spark.operators.projection import drop_by_prefix, rename_fields
 from platypus_ingestion_plugins_spark.operators.sharding import sharding_strategy
 from platypus_ingestion_plugins_spark.serving import query as SQ
+from platypus_ingestion_plugins_spark.streaming import replay
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -34,6 +35,14 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # (~1.7e18) exceed double precision.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+
+
+# Conf for the stream replays and scratch-index builds: the state-store
+# partition count is fixed at the first checkpoint from
+# spark.sql.shuffle.partitions, and the per-batch shuffles here are
+# tiny — the session default would schedule empty tasks and pay
+# per-partition state provider init/commit on every micro-batch.
+_SHUFFLE_8 = {"spark.sql.shuffle.partitions": "8"}
 
 
 def _ts_ms(df: DataFrame) -> "F.Column":
@@ -702,8 +711,6 @@ def _term_index_for(spark, sf, positions: bool) -> str:
     per query would only re-pay the build cost N times in the bench.
     Queries that MUTATE an index (lifecycle, streaming appends) build
     their own scratch copies and never touch this one."""
-    import shutil
-
     from platypus_ingestion_plugins_spark.serving import text_index as TI
 
     key = (os.path.abspath(sf), positions)
@@ -712,8 +719,7 @@ def _term_index_for(spark, sf, positions: bool) -> str:
         os.path.join(path, "_term_buckets")
     ):
         return path
-    work = _stream_scratch("term_idx_shared_")
-    try:
+    with replay.scratch(spark, "term_idx_shared_", keep="idx") as work:
         idx = os.path.join(work, "idx")
         TI.build_term_index(
             _t(spark, sf, "documents"),
@@ -723,10 +729,6 @@ def _term_index_for(spark, sf, positions: bool) -> str:
             buckets=32,
             positions=positions,
         )
-        _keep_until_exit(work, keep=idx)
-    except BaseException:
-        shutil.rmtree(work, ignore_errors=True)
-        raise
     _TERM_INDEX_MEMO[key] = idx
     return idx
 
@@ -1585,8 +1587,6 @@ def q_stream_rate_anomalies(spark, sf):
     exactly-once), and the readout z-scores the grid through the SAME
     code path as the batch twin, so the post-stream answer equals
     rate_anomalies over everything ingested (the oracle)."""
-    import shutil
-
     from platypus_ingestion_plugins_spark.operators.analytics import (
         hourly_counts_merge_into,
         rate_anomalies_read,
@@ -1594,40 +1594,25 @@ def q_stream_rate_anomalies(spark, sf):
 
     d = _events_ts(spark, sf).select("event_id", "ts", "event_type")
     lo, hi = _median_split(d, "event_id")
-    work = _stream_scratch("stream_rate_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with replay.scratch(spark, "stream_rate_", _SHUFFLE_8) as work:
         src = os.path.join(work, "src")
         ckpt = os.path.join(work, "ckpt")
         state = os.path.join(work, "hourly")
-
-        def run_available(mfpt, schema):
-            q = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", mfpt)
-                .parquet(src)
-                .writeStream.foreachBatch(
-                    lambda b, bid: hourly_counts_merge_into(
-                        b, "ts", "event_type", state, batch_id=bid
-                    )
+        run = replay.available_now(
+            spark, src, ckpt,
+            lambda s: s.writeStream.foreachBatch(
+                lambda b, bid: hourly_counts_merge_into(
+                    b, "ts", "event_type", state, batch_id=bid
                 )
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-        _replay_two_drops(spark, lo, hi, src, ckpt, run_available)
+            ),
+        )
+        replay.replay_two_drops(spark, lo, hi, src, ckpt, run)
         out = rate_anomalies_read(
             spark, state, window_hours=24, z_threshold=1.8, min_history=6
         )
-        # materialize before the scratch dir is scheduled for cleanup
+        # materialize before the scratch dir is removed
         rows = out.collect()
         return spark.createDataFrame(rows, out.schema)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def q_pagerank(spark, sf):
@@ -1760,8 +1745,6 @@ def q_stream_percolate(spark, sf):
     its (doc, query) hits to the alert log — set-semantic rows, so
     replays collapse on the distinct read. Post-stream alerts must
     equal the one-shot batch percolate (the oracle)."""
-    import shutil
-
     from platypus_ingestion_plugins_spark.serving.query import (
         percolate_stream_append,
         read_alerts,
@@ -1772,37 +1755,22 @@ def q_stream_percolate(spark, sf):
         _PERCOLATE_REGISTRY, "qid long, terms array<string>"
     )
     lo, hi = _median_split(d, "doc_id")
-    work = _stream_scratch("stream_perc_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with replay.scratch(spark, "stream_perc_", _SHUFFLE_8) as work:
         src = os.path.join(work, "src")
         ckpt = os.path.join(work, "ckpt")
         alerts = os.path.join(work, "alerts")
-
-        def run_available(mfpt, schema):
-            q = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", mfpt)
-                .parquet(src)
-                .writeStream.foreachBatch(
-                    lambda b, bid: percolate_stream_append(
-                        b, reg, "text", "doc_id", "qid", "terms", alerts
-                    )
+        run = replay.available_now(
+            spark, src, ckpt,
+            lambda s: s.writeStream.foreachBatch(
+                lambda b, bid: percolate_stream_append(
+                    b, reg, "text", "doc_id", "qid", "terms", alerts
                 )
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-        _replay_two_drops(spark, lo, hi, src, ckpt, run_available)
+            ),
+        )
+        replay.replay_two_drops(spark, lo, hi, src, ckpt, run)
         out = read_alerts(spark, alerts)
         rows = out.collect()
         return spark.createDataFrame(rows, out.schema)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def q_seasonal_anomalies(spark, sf):
@@ -2277,16 +2245,11 @@ def q_stream_term_index(spark, sf):
     one-shot full-corpus answer — posting membership is append-order
     and batch-split independent, and the readers' distinct collapses
     any replayed appends."""
-    import shutil
-
     from platypus_ingestion_plugins_spark.serving import text_index as TI
 
     docs = _t(spark, sf, "documents").select("doc_id", "text")
     lo, hi = _median_split(docs, "doc_id")
-    work = _stream_scratch("stream_tidx_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with replay.scratch(spark, "stream_tidx_", _SHUFFLE_8, keep="idx") as work:
         src = os.path.join(work, "src")
         idx = os.path.join(work, "idx")
         ckpt = os.path.join(work, "ckpt")
@@ -2296,29 +2259,12 @@ def q_stream_term_index(spark, sf):
                 batch_df, "text", "doc_id", idx, buckets=32, mode="append"
             )
 
-        def run_available(mfpt, schema):
-            q = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", mfpt)
-                .parquet(src)
-                .writeStream.foreachBatch(handle)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-        _replay_two_drops(spark, lo, hi, src, ckpt, run_available)
-        out = TI.search_terms_indexed(
+        run = replay.available_now(
+            spark, src, ckpt, lambda s: s.writeStream.foreachBatch(handle))
+        replay.replay_two_drops(spark, lo, hi, src, ckpt, run)
+        return TI.search_terms_indexed(
             spark, idx, ["join", "scan", "merge"], id_col="doc_id"
         )
-        _keep_until_exit(work, keep=idx)
-        return out
-    except BaseException:
-        shutil.rmtree(work, ignore_errors=True)
-        raise
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 def q_term_index_lifecycle(spark, sf):
@@ -2330,27 +2276,19 @@ def q_term_index_lifecycle(spark, sf):
     full-scan replay excluding the deleted docs, so both the delete
     semantics and the compaction's pure-storage-change contract are
     value-checked end to end."""
-    import shutil
-
     from platypus_ingestion_plugins_spark.serving import text_index as TI
 
     d = _t(spark, sf, "documents")
-    work = _stream_scratch("tidx_life_")
-    try:
+    with replay.scratch(spark, "tidx_life_", keep="idx") as work:
         idx = os.path.join(work, "idx")
         TI.build_term_index(d, "text", "doc_id", idx, buckets=32)
         TI.delete_docs(
             spark, idx, d.filter(F.col("doc_id") % 7 == 0).select("doc_id")
         )
         TI.compact_term_index(spark, idx)
-        out = TI.search_terms_indexed(
+        return TI.search_terms_indexed(
             spark, idx, ["join", "scan", "merge"], id_col="doc_id"
         )
-        _keep_until_exit(work, keep=idx)
-        return out
-    except BaseException:
-        shutil.rmtree(work, ignore_errors=True)
-        raise
 
 
 SQL_TERM_INDEX_LIFECYCLE = """
@@ -2653,8 +2591,6 @@ def q_stream_constraints(spark, sf):
     whole-corpus counts exactly (each row's null/range/domain verdict
     is batch-independent), which is what makes the guardrail
     trustworthy under any batch split."""
-    import shutil
-
     from platypus_ingestion_plugins_spark.operators import validate as V
 
     o = _t(spark, sf, "orders").select(
@@ -2666,28 +2602,18 @@ def q_stream_constraints(spark, sf):
         V.in_range("price_range", "o_totalprice", lo=0, hi=300000),
         V.accepted_values("status_domain", "o_orderstatus", ["O", "F"]),
     ]
-    work = _stream_scratch("stream_constraints_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with replay.scratch(
+        spark, "stream_constraints_", _SHUFFLE_8, keep="reports"
+    ) as work:
         src = os.path.join(work, "src")
         rep = os.path.join(work, "reports")
         ckpt = os.path.join(work, "ckpt")
-
-        def run_available(mfpt, schema):
-            q = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", mfpt)
-                .parquet(src)
-                .writeStream.foreachBatch(V.constraint_monitor(checks, rep))
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-        _replay_two_drops(spark, lo, hi, src, ckpt, run_available)
-        out = (
+        run = replay.available_now(
+            spark, src, ckpt,
+            lambda s: s.writeStream.foreachBatch(V.constraint_monitor(checks, rep)),
+        )
+        replay.replay_two_drops(spark, lo, hi, src, ckpt, run)
+        return (
             V.read_reports(spark, rep)
             .groupBy("check")
             .agg(
@@ -2695,13 +2621,6 @@ def q_stream_constraints(spark, sf):
                 F.sum("n_rows").alias("n_rows"),
             )
         )
-        _keep_until_exit(work, keep=rep)
-        return out
-    except BaseException:
-        shutil.rmtree(work, ignore_errors=True)
-        raise
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 SQL_STREAM_CONSTRAINTS = """
@@ -3699,8 +3618,6 @@ def q_stream_quantiles(spark, sf):
     crash-safe commit. The read-back quantiles therefore match the
     batch oracle exactly — always-current percentiles at k rows of
     state on an unbounded stream."""
-    import shutil
-
     from platypus_ingestion_plugins_spark.functions.sketches import (
         bottomk_merge_into,
         sketch_read,
@@ -3708,46 +3625,27 @@ def q_stream_quantiles(spark, sf):
 
     ev = _t(spark, sf, "events")
     ev_lo, ev_hi = _median_split(ev, "event_id")
-    work = _stream_scratch("stream_bk_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with replay.scratch(spark, "stream_bk_", _SHUFFLE_8) as work:
         src = os.path.join(work, "src")
         ckpt = os.path.join(work, "ckpt")
         state = os.path.join(work, "sample")
-
-        def run_available(mfpt, schema):
-            q = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", mfpt)
-                .parquet(src)
-                .writeStream.foreachBatch(
-                    lambda b, bid: bottomk_merge_into(
-                        b, "event_id", "value", state, k=256, batch_id=bid
-                    )
+        run = replay.available_now(
+            spark, src, ckpt,
+            lambda s: s.writeStream.foreachBatch(
+                lambda b, bid: bottomk_merge_into(
+                    b, "event_id", "value", state, k=256, batch_id=bid
                 )
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-        _replay_two_drops(spark, ev_lo.select("event_id", "value"), ev_hi.select("event_id", "value"), src, ckpt, run_available)
+            ),
+        )
+        replay.replay_two_drops(spark, ev_lo.select("event_id", "value"), ev_hi.select("event_id", "value"), src, ckpt, run)
 
         sample = sketch_read(spark, state)
-        out = sample.agg(
+        return sample.agg(
             F.round(F.percentile("v", F.lit(0.25)), 6).alias("q_0_25"),
             F.round(F.percentile("v", F.lit(0.5)), 6).alias("q_0_5"),
             F.round(F.percentile("v", F.lit(0.95)), 6).alias("q_0_95"),
             F.count(F.lit(1)).alias("n_sample"),
         ).localCheckpoint(eager=True)
-        shutil.rmtree(work, ignore_errors=True)
-        return out
-    except BaseException:
-        shutil.rmtree(work, ignore_errors=True)
-        raise
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 SQL_STREAM_QUANTILES = """
@@ -3797,8 +3695,6 @@ def q_stream_heavy_hitters(spark, sf):
     read off them match the batch oracle exactly — the
     precompute-per-batch-then-merge pattern that keeps frequency
     tracking O(depth×width) state on an unbounded stream."""
-    import shutil
-
     from platypus_ingestion_plugins_spark.functions.sketches import (
         countmin_estimate,
         countmin_read,
@@ -3807,49 +3703,28 @@ def q_stream_heavy_hitters(spark, sf):
 
     ev = _t(spark, sf, "events")
     ev_lo, ev_hi = _median_split(ev, "event_id")
-    work = _stream_scratch("stream_cm_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with replay.scratch(spark, "stream_cm_", _SHUFFLE_8) as work:
         src = os.path.join(work, "src")
         ckpt = os.path.join(work, "ckpt")
         counters_path = os.path.join(work, "counters")
-
-        def run_available(mfpt, schema):
-            stream = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", mfpt)
-                .parquet(src)
-            )
-            q = (
-                stream.writeStream.foreachBatch(
-                    lambda b, bid: countmin_merge_into(
-                        b, "event_type", counters_path,
-                        depth=4, width=256, batch_id=bid,
-                    )
+        run = replay.available_now(
+            spark, src, ckpt,
+            lambda s: s.writeStream.foreachBatch(
+                lambda b, bid: countmin_merge_into(
+                    b, "event_type", counters_path,
+                    depth=4, width=256, batch_id=bid,
                 )
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-        _replay_two_drops(spark, ev_lo.select("event_id", "event_type"), ev_hi.select("event_id", "event_type"), src, ckpt, run_available)
+            ),
+        )
+        replay.replay_two_drops(spark, ev_lo.select("event_id", "event_type"), ev_hi.select("event_id", "event_type"), src, ckpt, run)
 
         counters = countmin_read(spark, counters_path)
         keys = ev.select("event_type").distinct()
         est = countmin_estimate(counters, keys, "event_type", depth=4, width=256)
         exact = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("exact_count"))
-        out = est.join(exact, "event_type").select(
+        return est.join(exact, "event_type").select(
             "event_type", "est_count", "exact_count"
         ).localCheckpoint(eager=True)
-        shutil.rmtree(work, ignore_errors=True)
-        return out
-    except BaseException:
-        shutil.rmtree(work, ignore_errors=True)
-        raise
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 def q_text_normalize(spark, sf):
@@ -3895,18 +3770,13 @@ def q_ivf_append_compact(spark, sf):
     EXACT nearest-centroid assignment — a vector lost, duplicated, or
     refiled by the rewrite breaks the hash. Centroid-mismatch pinning
     and crash-heal are unit-covered (test_ivf_append_compact)."""
-    import shutil
-
     from platypus_ingestion_plugins_spark.operators import similarity
 
     emb = _t(spark, sf, "embeddings")
     cents = emb.orderBy("vec_id").limit(16)
     emb_lo, emb_hi = _median_split(emb, "vec_id")
-    work = _stream_scratch("ivf_idx_")
-    idx = os.path.join(work, "ivf")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with replay.scratch(spark, "ivf_idx_", _SHUFFLE_8, keep="ivf") as work:
+        idx = os.path.join(work, "ivf")
         # r17 (the band_index_compact pattern, guide §2.6): the two
         # half appends are independent but share one output path's
         # FileOutputCommitter _temporary dir — the second half appends
@@ -3918,16 +3788,10 @@ def q_ivf_append_compact(spark, sf):
             lambda: similarity.append_ivf_partitioned(emb_lo, cents, idx),
             lambda: similarity.append_ivf_partitioned(emb_hi, cents, side),
         )
-        _merge_partitioned_files(side, idx)
+        replay.merge_partitioned_files(side, idx)
         if not similarity.compact_ivf_partitioned(spark, idx, max_files_per_dir=1):
             raise RuntimeError("IVF compaction found nothing to rewrite")
-        _keep_until_exit(work, keep=idx)
         return spark.read.parquet(idx).select("vec_id", "cent_id")
-    except BaseException:
-        shutil.rmtree(work, ignore_errors=True)
-        raise
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 SQL_IVF_APPEND_COMPACT = """
@@ -4095,25 +3959,18 @@ def q_jsonl_roundtrip(spark, sf):
     reproduce every (doc_id, text, lang) exactly against the source
     table — the lingua-franca LLM data-drop format round-tripped
     bit-for-bit."""
-    import shutil
-
     from platypus_ingestion_plugins_spark.operators.export import (
         export_jsonl_shards,
         read_jsonl_shards,
     )
 
     docs = _t(spark, sf, "documents").select("doc_id", "text", "lang")
-    work = _stream_scratch("jsonl_exp_")
-    out = os.path.join(work, "jsonl")
-    try:
+    with replay.scratch(spark, "jsonl_exp_", keep="jsonl") as work:
+        out = os.path.join(work, "jsonl")
         export_jsonl_shards(docs, out, "doc_id", n_shards=8)
-        _keep_until_exit(work, keep=out)
         return read_jsonl_shards(
             spark, out, "doc_id long, text string, lang string"
         )
-    except BaseException:
-        shutil.rmtree(work, ignore_errors=True)
-        raise
 
 
 SQL_JSONL_ROUNDTRIP = """
@@ -4174,15 +4031,10 @@ def q_stream_exact_substring_dedup(spark, sf):
     every 4th epoch), and emits append-only. Under the seq-ordered
     contract the union of batch outputs equals the one-shot
     first-keeps computation the oracle replays."""
-    import shutil
-
     d = _t(spark, sf, "documents").select("doc_id", "text")
     docs_lo, docs_hi = _median_split(d, "doc_id")
 
-    work = _stream_scratch("stream_substr_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with replay.scratch(spark, "stream_substr_", _SHUFFLE_8, keep="out") as work:
         src = os.path.join(work, "src")
         idx = os.path.join(work, "index")
         outp = os.path.join(work, "out")
@@ -4235,32 +4087,14 @@ def q_stream_exact_substring_dedup(spark, sf):
             finally:
                 starts.unpersist()
 
-        def run_available(mfpt, schema):
-            stream = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", mfpt)
-                .parquet(src)
-            )
-            q = (
-                stream.writeStream.foreachBatch(handle)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-        _replay_two_drops(spark, docs_lo, docs_hi, src, ckpt, run_available)
-        _keep_until_exit(work, keep=outp)
+        run = replay.available_now(
+            spark, src, ckpt, lambda s: s.writeStream.foreachBatch(handle))
+        replay.replay_two_drops(spark, docs_lo, docs_hi, src, ckpt, run)
         return (
             spark.read.parquet(outp)
             .select("doc_id", F.sha2("text_deduped", 256).alias("sha_clean"))
             .distinct()
         )
-    except BaseException:
-        shutil.rmtree(work, ignore_errors=True)
-        raise
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 # one-shot FIRST-KEEPS replay: doc masks a window iff >= 1 smaller-id
@@ -4337,23 +4171,16 @@ def q_avro_roundtrip(spark, sf):
     deterministic permutation order (streamed per-task blocks, no
     in-memory file image) and the ranged block-split reader must
     reproduce every (doc_id, text, lang) exactly."""
-    import shutil
-
     from platypus_ingestion_plugins_spark.sources.avro_ocf import (
         export_avro_ocf,
         read_avro_ocf,
     )
 
     docs = _t(spark, sf, "documents").select("doc_id", "text", "lang")
-    work = _stream_scratch("avro_exp_")
-    out = os.path.join(work, "ocf")
-    try:
+    with replay.scratch(spark, "avro_exp_", keep="ocf") as work:
+        out = os.path.join(work, "ocf")
         export_avro_ocf(docs, out, "doc_id", n_shards=8)
-        _keep_until_exit(work, keep=out)
         return read_avro_ocf(spark, out)
-    except BaseException:
-        shutil.rmtree(work, ignore_errors=True)
-        raise
 
 
 SQL_AVRO_ROUNDTRIP = """
@@ -4369,29 +4196,22 @@ def q_tar_roundtrip(spark, sf):
     tar reader must reproduce every (doc_id, text) EXACTLY — a sample
     lost, duplicated, or byte-mangled by the tar framing breaks the
     value hash against the source table."""
-    import shutil
-
     from platypus_ingestion_plugins_spark.operators.export import (
         export_tar_shards,
         read_tar_shards,
     )
 
     docs = _t(spark, sf, "documents").select("doc_id", "text")
-    work = _stream_scratch("tar_wds_")
-    out = os.path.join(work, "wds")
-    try:
+    with replay.scratch(spark, "tar_wds_", keep="wds") as work:
+        out = os.path.join(work, "wds")
         manifest = export_tar_shards(
             docs, out, "doc_id", {"text": "txt"}, n_shards=8
         )
         if len(manifest) != 8:
             raise RuntimeError(f"expected 8 tar shards, got {len(manifest)}")
-        _keep_until_exit(work, keep=out)
         return read_tar_shards(spark, out, {"txt": "text"}, key_name="k").select(
             F.col("k").cast("long").alias("doc_id"), "text"
         )
-    except BaseException:
-        shutil.rmtree(work, ignore_errors=True)
-        raise
 
 
 SQL_TAR_ROUNDTRIP = """
@@ -6355,9 +6175,6 @@ def q_stream_line_dedup(spark, sf):
     count index is PARTITIONED by kb = hash(line_key) % 16 and each
     batch reads only its own buckets (read_line_counts_pruned —
     bounded driver collect, literal partition filters)."""
-    import shutil
-
-    from platypus_ingestion_plugins_spark import fs as _fs
 
     d = _t(spark, sf, "documents")
     boiler = F.concat(
@@ -6371,10 +6188,7 @@ def q_stream_line_dedup(spark, sf):
     docs = d.select("doc_id", t2.alias("text"))
     docs_lo, docs_hi = _median_split(docs, "doc_id")
 
-    work = _stream_scratch("stream_linededup_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with replay.scratch(spark, "stream_linededup_", _SHUFFLE_8, keep="out") as work:
         src = os.path.join(work, "src")
         idx = os.path.join(work, "index")
         outp = os.path.join(work, "out")
@@ -6439,33 +6253,15 @@ def q_stream_line_dedup(spark, sf):
             finally:
                 pairs.unpersist()
 
-        def run_available(mfpt, schema):
-            stream = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", mfpt)
-                .parquet(src)
-            )
-            q = (
-                stream.writeStream.foreachBatch(handle)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-        _replay_two_drops(spark, docs_lo, docs_hi, src, ckpt, run_available)
-        _keep_until_exit(work, keep=outp)
+        run = replay.available_now(
+            spark, src, ckpt, lambda s: s.writeStream.foreachBatch(handle))
+        replay.replay_two_drops(spark, docs_lo, docs_hi, src, ckpt, run)
         # distinct: a replayed batch's re-appended output rows are
         # identical and collapse here (the neardup query's defense)
         return spark.read.parquet(outp).select(
             "doc_id", F.sha2("text", 256).alias("sha_text"),
             "n_lines", "n_dropped",
         ).distinct()
-    except BaseException:
-        shutil.rmtree(work, ignore_errors=True)
-        raise
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 SQL_STREAM_LINE_DEDUP = """
@@ -7246,17 +7042,14 @@ def q_stream_image_neardup(spark, sf):
     batch-split independent, so the streamed union must equal the
     oracle's one-shot all-pairs filter — the multimodal axis now has
     the same batch/stream dedup symmetry as text."""
-    import shutil
-
     from platypus_ingestion_plugins_spark import fs as _fs
 
     docs = _t(spark, sf, "documents").select("doc_id", "text")
     docs_lo, docs_hi = _median_split(docs, "doc_id")
 
-    work = _stream_scratch("stream_imgdup_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with replay.scratch(
+        spark, "stream_imgdup_", _SHUFFLE_8, keep="survivors"
+    ) as work:
         src = os.path.join(work, "src")
         idx = os.path.join(work, "index")
         surv = os.path.join(work, "survivors")
@@ -7312,28 +7105,10 @@ def q_stream_image_neardup(spark, sf):
             finally:
                 keys.unpersist()
 
-        def run_available(mfpt, schema):
-            stream = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", mfpt)
-                .parquet(src)
-            )
-            q = (
-                stream.writeStream.foreachBatch(handle)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-        _replay_two_drops(spark, docs_lo, docs_hi, src, ckpt, run_available)
-        _keep_until_exit(work, keep=surv)
+        run = replay.available_now(
+            spark, src, ckpt, lambda s: s.writeStream.foreachBatch(handle))
+        replay.replay_two_drops(spark, docs_lo, docs_hi, src, ckpt, run)
         return spark.read.parquet(surv).distinct()
-    except BaseException:
-        shutil.rmtree(work, ignore_errors=True)
-        raise
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 # one-shot replay: keep a doc iff no smaller-id doc's dHash sits
@@ -7439,36 +7214,34 @@ def q_multimodal_external_meta(spark, sf):
     Uses externalize_to_table (externalize + parquet materialization
     barrier), the pattern object stores require: pointers are pinned
     by ONE action and blob streams are closed before any read."""
-    import atexit
-    import shutil
-
     d = multimodal.attach_payload(
         _t(spark, sf, "documents"), "text", mime="text/plain"
     ).select("doc_id", "payload")
-    work = _stream_scratch("mm_ext_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    ext = multimodal.externalize_to_table(
-        d, f"{work}/blobs", f"{work}/refs", threshold_bytes=256
-    )
-    # GC under the oracle (VERDICT r6 #8): plant an orphan blob (a
-    # failed-attempt leftover), collect with min_age_s=0 (safe — the
-    # materialization barrier above guarantees no writer is in
-    # flight). The orphan must go; every referenced blob must survive,
-    # or the round-tripped hashes below break the value hash.
-    orphan = f"{work}/blobs/blob-deadattempt-00000.bin"
-    with open(orphan, "wb") as f:
-        f.write(b"uncommitted task-attempt leftover")
-    deleted = multimodal.gc_blobs(ext, f"{work}/blobs", min_age_s=0)
-    if deleted != [orphan]:
-        raise RuntimeError(f"gc_blobs deleted {deleted}, expected [{orphan}]")
-    back = multimodal.load_payloads(ext)
-    return back.select(
-        "doc_id",
-        F.lit("text/plain").alias("mime"),
-        F.length("payload").alias("n_bytes"),
-        F.sha2(F.col("payload"), 256).alias("payload_sha"),
-        F.replace(F.base64(F.col("payload")), F.lit("\r\n"), F.lit("")).alias("payload_b64"),
-    )
+    # blobs and refs both back the returned plan: one kept child holds them
+    with replay.scratch(spark, "mm_ext_", keep="ext") as work:
+        blobs = f"{work}/ext/blobs"
+        ext = multimodal.externalize_to_table(
+            d, blobs, f"{work}/ext/refs", threshold_bytes=256
+        )
+        # GC under the oracle (VERDICT r6 #8): plant an orphan blob (a
+        # failed-attempt leftover), collect with min_age_s=0 (safe — the
+        # materialization barrier above guarantees no writer is in
+        # flight). The orphan must go; every referenced blob must survive,
+        # or the round-tripped hashes below break the value hash.
+        orphan = f"{blobs}/blob-deadattempt-00000.bin"
+        with open(orphan, "wb") as f:
+            f.write(b"uncommitted task-attempt leftover")
+        deleted = multimodal.gc_blobs(ext, blobs, min_age_s=0)
+        if deleted != [orphan]:
+            raise RuntimeError(f"gc_blobs deleted {deleted}, expected [{orphan}]")
+        back = multimodal.load_payloads(ext)
+        return back.select(
+            "doc_id",
+            F.lit("text/plain").alias("mime"),
+            F.length("payload").alias("n_bytes"),
+            F.sha2(F.col("payload"), 256).alias("payload_sha"),
+            F.replace(F.base64(F.col("payload")), F.lit("\r\n"), F.lit("")).alias("payload_b64"),
+        )
 
 
 SQL_MULTIMODAL_EXTERNAL_META = SQL_MULTIMODAL_META
@@ -7482,8 +7255,6 @@ def q_cdc_format_last_wins(spark, sf):
     incremental last_snapshot=0 option — and materialized to last-wins
     state. Same oracle as cdc_last_wins: the sugar must be a pure
     access-path change."""
-    import shutil
-
     from platypus_ingestion_plugins_spark.sources import cdc_table
     from platypus_ingestion_plugins_spark.sources.cdc_format import (
         register_cdc_table_source,
@@ -7501,8 +7272,10 @@ def q_cdc_format_last_wins(spark, sf):
         .alias("_row_kind"),
     )
     ch_lo, ch_hi = _median_split(ch, "_seq")
-    work = _stream_scratch("cdc_format_")
-    try:
+    # the scratch log must outlive this lazy plan (driver collects
+    # later) — kept until end of process like the other scratch-backed
+    # entries
+    with replay.scratch(spark, "cdc_format_", keep="log") as work:
         log = os.path.join(work, "log")
         cdc_table.write_cdc_snapshot(ch_lo, log, snapshot_id=1)
         cdc_table.write_cdc_snapshot(ch_hi, log, snapshot_id=2)
@@ -7514,15 +7287,7 @@ def q_cdc_format_last_wins(spark, sf):
             .drop("_snapshot")
         )
         state = cdc.apply_changelog(back, "user_id")
-        out = state.select("user_id", "event_type", "value")
-        # the scratch log must outlive this lazy plan (driver collects
-        # later) — park it for end-of-process cleanup like the other
-        # scratch-backed entries
-        _keep_until_exit(work, keep=log)
-        return out
-    except BaseException:
-        shutil.rmtree(work, ignore_errors=True)
-        raise
+        return state.select("user_id", "event_type", "value")
 
 
 def q_cdc_time_travel(spark, sf):
@@ -7532,8 +7297,6 @@ def q_cdc_time_travel(spark, sf):
     partition pruning keeps snapshot 2's files unopened, and the
     result must equal a last-wins materialization over the first
     drop alone (the oracle replays the exact median split)."""
-    import shutil
-
     from platypus_ingestion_plugins_spark.sources import cdc_table
 
     ev = _t(spark, sf, "events")
@@ -7548,18 +7311,12 @@ def q_cdc_time_travel(spark, sf):
         .alias("_row_kind"),
     )
     ch_lo, ch_hi = _median_split(ch, "_seq")
-    work = _stream_scratch("cdc_tt_")
-    try:
+    with replay.scratch(spark, "cdc_tt_", keep="log") as work:
         log = os.path.join(work, "log")
         cdc_table.write_cdc_snapshot(ch_lo, log, snapshot_id=1)
         cdc_table.write_cdc_snapshot(ch_hi, log, snapshot_id=2)
         state1 = cdc_table.read_as_of(spark, log, 1, "user_id")
-        out = state1.select("user_id", "event_type", "value")
-        _keep_until_exit(work, keep=log)
-        return out
-    except BaseException:
-        shutil.rmtree(work, ignore_errors=True)
-        raise
+        return state1.select("user_id", "event_type", "value")
 
 
 SQL_CDC_TIME_TRAVEL = """
@@ -7583,8 +7340,6 @@ def q_cdc_compact_read(spark, sf):
     equal the uncompacted full-table materialization exactly (the
     cdc_last_wins oracle), proving compaction is a pure storage
     change."""
-    import shutil
-
     from platypus_ingestion_plugins_spark.sources import cdc_table
 
     ev = _t(spark, sf, "events")
@@ -7599,19 +7354,13 @@ def q_cdc_compact_read(spark, sf):
         .alias("_row_kind"),
     )
     ch_lo, ch_hi = _median_split(ch, "_seq")
-    work = _stream_scratch("cdc_compact_")
-    try:
+    with replay.scratch(spark, "cdc_compact_", keep="log") as work:
         log = os.path.join(work, "log")
         cdc_table.write_cdc_snapshot(ch_lo, log, snapshot_id=1)
         cdc_table.write_cdc_snapshot(ch_hi, log, snapshot_id=2)
         cdc_table.compact_snapshots(spark, log, upto=2, key="user_id")
         state = cdc_table.read_as_of(spark, log, 2, "user_id")
-        out = state.select("user_id", "event_type", "value")
-        _keep_until_exit(work, keep=log)
-        return out
-    except BaseException:
-        shutil.rmtree(work, ignore_errors=True)
-        raise
+        return state.select("user_id", "event_type", "value")
 
 
 def q_assemble_chat(spark, sf):
@@ -7660,9 +7409,6 @@ def q_stream_cdc_materialize(spark, sf):
     into two seq-ordered micro-batches, streamed from parquet through
     foreachBatch into a ServingTable, then queried. Final state must
     equal the one-shot batch materialization (same oracle)."""
-    import shutil
-    import tempfile
-
     from platypus_ingestion_plugins_spark.serving.table import ServingTable
     from platypus_ingestion_plugins_spark.streaming.pipeline import CdcStreamingPipeline
 
@@ -7679,12 +7425,7 @@ def q_stream_cdc_materialize(spark, sf):
     )
     ch_lo, ch_hi = _median_split(ch, "_seq")
 
-    work = _stream_scratch("stream_cdc_")
-    # per-batch merge shuffles are tiny; 8 partitions cuts task and
-    # state-file overhead (same sizing rationale as stream_sessionize)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with replay.scratch(spark, "stream_cdc_", _SHUFFLE_8, keep="serving") as work:
         src = os.path.join(work, "src")
         ckpt = os.path.join(work, "ckpt")
         # bucketed layout: each micro-batch rewrites only the hash-bucket
@@ -7694,22 +7435,16 @@ def q_stream_cdc_materialize(spark, sf):
         )
 
         # two ordered drops (all seqs <= mid, then the rest) as two
-        # micro-batches of one drain — r17 single-run replay, same as
-        # the rest of the stream family (_replay_two_drops)
-        def run_available(mfpt, schema):
+        # micro-batches of one drain — the same single-run replay as
+        # the rest of the stream family (replay.replay_two_drops)
+        def run(mfpt, schema):
             CdcStreamingPipeline(
                 spark, src, schema, serving, ckpt,
                 max_files_per_trigger=mfpt,
             ).run_available()
 
-        _replay_two_drops(spark, ch_lo, ch_hi, src, ckpt, run_available)
-        _keep_until_exit(work, keep=os.path.join(work, "serving"))
+        replay.replay_two_drops(spark, ch_lo, ch_hi, src, ckpt, run)
         return serving.query().select("user_id", "event_type", "value")
-    except BaseException:
-        shutil.rmtree(work, ignore_errors=True)
-        raise
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 SQL_STREAM_CDC_MATERIALIZE = SQL_CDC_LAST_WINS
@@ -7725,8 +7460,6 @@ def q_serving_compact(spark, sf):
     post-compaction read must hash-match the one-shot batch
     materialization — a row lost, duplicated, or schema-stale'd by
     compaction breaks the value hash."""
-    import shutil
-
     from platypus_ingestion_plugins_spark.serving.table import ServingTable
 
     ev = _t(spark, sf, "events")
@@ -7742,17 +7475,16 @@ def q_serving_compact(spark, sf):
     )
     ch_lo, ch_hi = _median_split(ch, "_seq")
 
-    work = _stream_scratch("serving_compact_")
     # 16 shuffle partitions over 8 buckets with AQE coalescing OFF:
     # each merge rewrite fans a bucket across ~2 tasks, reproducing at
     # sandbox scale the multi-file buckets a real micro-batch stream
     # accumulates (at sf0.1 AQE would otherwise coalesce the tiny
     # shuffle to one file per bucket and compact() would no-op)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_coalesce = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try:
+    conf = {
+        "spark.sql.shuffle.partitions": "16",
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+    with replay.scratch(spark, "serving_compact_", conf, keep="serving") as work:
         serving = ServingTable(
             spark, os.path.join(work, "serving"), key="user_id", num_buckets=8
         )
@@ -7766,16 +7498,7 @@ def q_serving_compact(spark, sf):
             # three merge rewrites must leave >1 file in some bucket;
             # a no-op here means the query no longer exercises compact
             raise RuntimeError("compact() found nothing to rewrite")
-        _keep_until_exit(work, keep=os.path.join(work, "serving"))
         return serving.query().select("user_id", "event_type", "value")
-    except BaseException:
-        shutil.rmtree(work, ignore_errors=True)
-        raise
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set(
-            "spark.sql.adaptive.coalescePartitions.enabled", prev_coalesce
-        )
 
 
 SQL_SERVING_COMPACT = SQL_CDC_LAST_WINS
@@ -7789,49 +7512,23 @@ def q_stream_dedup_exact(spark, sf):
     Emits the surviving hash set (the one deterministic projection: a
     duplicate group's surviving doc_id depends on arrival order).
     Oracle: batch DISTINCT over the same hash."""
-    import shutil
-    import tempfile
-
     docs = _t(spark, sf, "documents").select("doc_id", "text")
     docs_lo, docs_hi = _median_split(docs, "doc_id")
 
-    work = _stream_scratch("stream_dedup_")
-    # dropDuplicates state-store partition count is fixed at the first
-    # checkpoint from spark.sql.shuffle.partitions; 8 suits the sandbox
-    # key cardinality and cuts per-batch provider init/commit cost
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with replay.scratch(spark, "stream_dedup_", _SHUFFLE_8, keep="out") as work:
         src = os.path.join(work, "src")
         out = os.path.join(work, "out")
         ckpt = os.path.join(work, "ckpt")
-
-        def run_available(mfpt, schema):
-            stream = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", mfpt)
-                .parquet(src)
-            )
-            q = (
-                stream.select(F.sha2(F.col("text"), 256).alias("content_sha"))
-                .dropDuplicates(["content_sha"])
-                .writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-        _replay_two_drops(spark, docs_lo, docs_hi, src, ckpt, run_available)
-        _keep_until_exit(work, keep=out)
+        run = replay.available_now(
+            spark, src, ckpt,
+            lambda s: s.select(F.sha2(F.col("text"), 256).alias("content_sha"))
+            .dropDuplicates(["content_sha"])
+            .writeStream.format("parquet")
+            .option("path", out)
+            .outputMode("append"),
+        )
+        replay.replay_two_drops(spark, docs_lo, docs_hi, src, ckpt, run)
         return spark.read.parquet(out)
-    except BaseException:
-        shutil.rmtree(work, ignore_errors=True)
-        raise
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 SQL_STREAM_DEDUP_EXACT = """
@@ -7850,8 +7547,6 @@ def q_stream_chat_dedup(spark, sf):
     collides across the drop boundary. Emits the surviving key set
     (set semantics are split-independent; the oracle is a DISTINCT
     over the replayed keys)."""
-    import shutil
-
     from platypus_ingestion_plugins_spark.operators import chat as CHAT
 
     docs = _t(spark, sf, "documents").select("doc_id", "text")
@@ -7868,47 +7563,27 @@ def q_stream_chat_dedup(spark, sf):
     conv = docs.select("doc_id", turns.alias("turns"))
     lo, hi = _median_split(conv, "doc_id")
 
-    work = _stream_scratch("stream_chat_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with replay.scratch(spark, "stream_chat_", _SHUFFLE_8, keep="out") as work:
         src = os.path.join(work, "src")
         out = os.path.join(work, "out")
         ckpt = os.path.join(work, "ckpt")
-
-        def run_available(mfpt, schema):
-            stream = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", mfpt)
-                .parquet(src)
+        run = replay.available_now(
+            spark, src, ckpt,
+            lambda s: s.select(
+                CHAT.assistant_transcript_key("turns").alias("atk")
             )
-            q = (
-                stream.select(
-                    CHAT.assistant_transcript_key("turns").alias("atk")
-                )
-                # assistant-free conversations carry a NULL key and are
-                # NOT duplicates of each other — they bypass the
-                # stateful dedup (none exist in this fixture; the
-                # filter IS the routing)
-                .filter(F.col("atk").isNotNull())
-                .dropDuplicates(["atk"])
-                .writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-        _replay_two_drops(spark, lo, hi, src, ckpt, run_available)
-        _keep_until_exit(work, keep=out)
+            # assistant-free conversations carry a NULL key and are
+            # NOT duplicates of each other — they bypass the
+            # stateful dedup (none exist in this fixture; the
+            # filter IS the routing)
+            .filter(F.col("atk").isNotNull())
+            .dropDuplicates(["atk"])
+            .writeStream.format("parquet")
+            .option("path", out)
+            .outputMode("append"),
+        )
+        replay.replay_two_drops(spark, lo, hi, src, ckpt, run)
         return spark.read.parquet(out)
-    except BaseException:
-        shutil.rmtree(work, ignore_errors=True)
-        raise
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 SQL_STREAM_CHAT_DEDUP = """
@@ -7939,17 +7614,14 @@ def q_stream_neardup_dedup(spark, sf):
     proportional to the batch's key diversity, not the accumulated
     corpus; the survivors join's left side is the batch alone
     (neardup_survivors_incremental), not every earlier doc."""
-    import shutil
-
     from platypus_ingestion_plugins_spark import fs as _fs
 
     docs = _t(spark, sf, "documents").select("doc_id", "text")
     docs_lo, docs_hi = _median_split(docs, "doc_id")
 
-    work = _stream_scratch("stream_neardup_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with replay.scratch(
+        spark, "stream_neardup_", _SHUFFLE_8, keep="survivors"
+    ) as work:
         src = os.path.join(work, "src")
         idx = os.path.join(work, "index")
         surv = os.path.join(work, "survivors")
@@ -7995,32 +7667,14 @@ def q_stream_neardup_dedup(spark, sf):
             finally:
                 keys.unpersist()
 
-        def run_available(mfpt, schema):
-            stream = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", mfpt)
-                .parquet(src)
-            )
-            q = (
-                stream.writeStream.foreachBatch(handle)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
+        run = replay.available_now(
+            spark, src, ckpt, lambda s: s.writeStream.foreachBatch(handle))
         # index compaction is oracle-certified by its own query
         # (band_index_compact) — wiring it here would add a third of
         # the cost to the suite's most expensive entry for coverage a
         # cheap batch query provides identically
-        _replay_two_drops(spark, docs_lo, docs_hi, src, ckpt, run_available)
-        _keep_until_exit(work, keep=surv)
+        replay.replay_two_drops(spark, docs_lo, docs_hi, src, ckpt, run)
         return spark.read.parquet(surv).distinct()
-    except BaseException:
-        shutil.rmtree(work, ignore_errors=True)
-        raise
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 SQL_STREAM_NEARDUP_DEDUP = f"""
@@ -8032,149 +7686,6 @@ WHERE NOT EXISTS (
   WHERE e.doc_id < d.doc_id
     AND bit_count(xor(e.simhash, d.simhash)) <= 3)
 """
-
-
-def _stream_scratch(prefix: str) -> str:
-    """Scratch dir for a streaming query's src/ckpt/out. Prefers tmpfs
-    (/dev/shm): a checkpointed micro-batch writes hundreds of tiny
-    state/offset/commit files whose fsync cost dominates the query at
-    sandbox scale — RAM-backed scratch cuts the constant factor without
-    touching the plan. Falls back to the default tmp dir."""
-    import tempfile
-
-    shm = "/dev/shm"
-    return tempfile.mkdtemp(
-        prefix=prefix, dir=shm if os.path.isdir(shm) and os.access(shm, os.W_OK) else None
-    )
-
-
-# Flip for A/B only (scripts/ab_two_drop_replay.py): False forces the
-# pre-r17 two-run shape through the same code path.
-_SINGLE_RUN_DROPS = True
-
-
-def _replay_two_drops(spark, lo, hi, src, ckpt, run_available):
-    """Write both drops, then replay them as two micro-batches of ONE
-    availableNow query: ``maxFilesPerTrigger`` = the first drop's file
-    count, so the drops stay separate batches while the replay pays
-    one query start (planning, source init, state/provider load,
-    trailing no-data batch where applicable) instead of two — the
-    fixed cost that dominated every stream_* entry at bench scale
-    (VERDICT r16 task #7; scripts/ab_stream_drops.py measured the
-    stateful pair, scripts/ab_two_drop_replay.py the foreachBatch
-    family). ``run_available(mfpt, schema)`` must start one
-    availableNow pass over ``src`` and block until it terminates;
-    batch ids are unchanged vs the two-run shape (0 then 1 — ids are
-    checkpoint-global), so per-epoch foreachBatch logic keyed on the
-    batch id behaves identically.
-
-    The file source orders pending files oldest-first (modification
-    time), and the two write jobs are strictly sequential, so batch 0
-    is the lo drop; the offsets-log check below turns any violation
-    of that precondition into a loud failure instead of a silently
-    different replay. If the hi drop ever fragments into MORE files
-    than lo, single-run batching could split it mid-drop (a drop is
-    only time-ordered as a whole) — fall back to the two-run shape,
-    which is byte-identical to the pre-r17 path."""
-    import json as _json
-
-    lo.coalesce(4).write.mode("append").parquet(src)
-    lo_files = sorted(
-        f for f in os.listdir(src) if f.endswith(".parquet"))
-    # hi goes to a sibling dir first so the one-run-vs-two-run choice
-    # is made BEFORE the second drop becomes visible to the source
-    side = src + ".drop2"
-    hi.coalesce(4).write.parquet(side)
-    hi_files = sorted(
-        f for f in os.listdir(side) if f.endswith(".parquet"))
-    schema = spark.read.parquet(src).schema
-
-    def move_hi_in():
-        # rename preserves mtimes, which the two sequential write jobs
-        # already ordered lo-before-hi; part-file names carry per-job
-        # UUIDs so cross-job collisions cannot occur
-        for f in hi_files:
-            os.rename(os.path.join(side, f), os.path.join(src, f))
-
-    if len(hi_files) > len(lo_files) or not _SINGLE_RUN_DROPS:
-        run_available(len(lo_files) + len(hi_files), schema)
-        move_hi_in()
-        run_available(len(lo_files) + len(hi_files), schema)
-        return
-    move_hi_in()
-    run_available(len(lo_files), schema)
-    # prove the micro-batch boundary followed the drop boundary
-    src_log = os.path.join(ckpt, "sources", "0", "0")
-    with open(src_log) as f:
-        batch0 = sorted(
-            os.path.basename(_json.loads(line)["path"])
-            for line in f if line.startswith("{"))
-    if batch0 != lo_files:
-        raise RuntimeError(
-            f"two-drop stream batching violated the drop boundary: "
-            f"batch 0 read {batch0}, expected the lo drop {lo_files}")
-
-
-def _run_two_drop_stream(spark, lo, hi, src, out, ckpt, xform):
-    """_replay_two_drops for the parquet-sink stateful queries
-    (stream_funnel / stream_sessionize): the transform's stream writes
-    append-mode parquet to ``out``."""
-
-    def run_available(mfpt, schema):
-        q = (
-            xform(
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", mfpt)
-                .parquet(src)
-            )
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    _replay_two_drops(spark, lo, hi, src, ckpt, run_available)
-
-
-def _keep_until_exit(work: str, keep: str):
-    """Drop the stream's src/ckpt scratch now, keep the result parquet
-    until interpreter exit — the returned DataFrame stays a lazy scan
-    (no collect + row-by-row re-parallelize of the result)."""
-    import atexit
-    import shutil
-
-    for name in os.listdir(work):
-        p = os.path.join(work, name)
-        if p != keep:
-            shutil.rmtree(p, ignore_errors=True)
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-
-
-def _merge_partitioned_files(side: str, idx: str) -> None:
-    """Move a staging index's partition files into the main index
-    (local scratch only — both dirs live under _stream_scratch).
-    Same-directory appends cannot run concurrently (two Spark jobs
-    share the FileOutputCommitter _temporary dir under one output
-    path), so the second half is appended to ``side`` in parallel and
-    its ``key=``-partition parquet files renamed in here; part-file
-    names carry per-job UUIDs, so cross-job collisions cannot occur
-    and the merged directory state is byte-identical to two serial
-    appends. Works for any partition depth (band=/vb=, cent_id=)."""
-    for dirpath, _dirnames, filenames in os.walk(side):
-        rel = os.path.relpath(dirpath, side)
-        parts = [] if rel == "." else rel.split(os.sep)
-        if not all("=" in p for p in parts):
-            continue  # only partition dirs carry data files
-        for f in filenames:
-            if f.endswith(".parquet"):
-                dst_dir = os.path.join(idx, *parts)
-                os.makedirs(dst_dir, exist_ok=True)
-                os.rename(
-                    os.path.join(dirpath, f), os.path.join(dst_dir, f)
-                )
 
 
 def q_band_index_compact(spark, sf):
@@ -8190,12 +7701,10 @@ def q_band_index_compact(spark, sf):
     but CANNOT overlap on one output path (shared FileOutputCommitter
     _temporary dir), so the second half appends to a distinct staging
     index concurrently (guide §2.6) and its partition files rename in
-    (_merge_partitioned_files) — directory state byte-identical to two
-    serial appends, compaction exercised identically. Interleaved A/B
-    (scripts/ab_band_stage.py, rows asserted identical): 2.26 ->
-    1.55 s min-of-4 at sf0.1."""
-    import shutil
-
+    (replay.merge_partitioned_files) — directory state byte-identical
+    to two serial appends, compaction exercised identically.
+    Interleaved A/B (scripts/ab_band_stage.py, rows asserted
+    identical): 2.26 -> 1.55 s min-of-4 at sf0.1."""
     docs = _t(spark, sf, "documents").select("doc_id", "text")
     docs_lo, docs_hi = _median_split(docs, "doc_id")
     # fingerprint per half: same two UDF evaluations as the old
@@ -8203,14 +7712,11 @@ def q_band_index_compact(spark, sf):
     keys_lo = dedup.simhash_band_keys(docs_lo, "text", "doc_id", bits=32, bands=4)
     keys_hi = dedup.simhash_band_keys(docs_hi, "text", "doc_id", bits=32, bands=4)
 
-    work = _stream_scratch("band_idx_")
-    idx = os.path.join(work, "index")
     # 8 shuffle partitions: repartition("band","vb") has at most 16
     # groups here — the session default would schedule empty tasks
     # (same sizing rationale as the sibling streaming index queries)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with replay.scratch(spark, "band_idx_", _SHUFFLE_8, keep="index") as work:
+        idx = os.path.join(work, "index")
         # val_buckets=4 (16 dirs): the certification targets the
         # rewrite+swap, not directory count — fewer dirs, fewer tiny
         # files and swap round-trips at sandbox scale
@@ -8219,17 +7725,11 @@ def q_band_index_compact(spark, sf):
             lambda: dedup.append_band_key_index(keys_lo, idx, val_buckets=4),
             lambda: dedup.append_band_key_index(keys_hi, side, val_buckets=4),
         )
-        _merge_partitioned_files(side, idx)
+        replay.merge_partitioned_files(side, idx)
         if not dedup.compact_band_key_index(spark, idx, max_files_per_dir=1):
             # a no-op means the query stopped exercising compaction
             raise RuntimeError("band-key index compaction found nothing")
-        _keep_until_exit(work, keep=idx)
         return spark.read.parquet(idx).select("doc_id", "simhash", "band", "val")
-    except BaseException:
-        shutil.rmtree(work, ignore_errors=True)
-        raise
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 SQL_BAND_INDEX_COMPACT = f"""
@@ -8249,19 +7749,13 @@ def q_stream_agg_materialize(spark, sf):
     aggregate — the materialized-view maintenance pattern where only
     CHANGED groups are rewritten per batch. Sums use exact decimal
     (order-independent), so values hash-match the oracle."""
-    import shutil
-    import tempfile
-
     from platypus_ingestion_plugins_spark.serving.table import ServingTable
 
     ev = _t(spark, sf, "events")
     ch = ev.select("event_id", "user_id", F.col("value"))
     ch_lo, ch_hi = _median_split(ch, "event_id")
 
-    work = _stream_scratch("stream_agg_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with replay.scratch(spark, "stream_agg_", _SHUFFLE_8, keep="serving") as work:
         src = os.path.join(work, "src")
         ckpt = os.path.join(work, "ckpt")
         serving = ServingTable(
@@ -8275,39 +7769,23 @@ def q_stream_agg_materialize(spark, sf):
                 )
             )
 
-        def run_available(mfpt, schema):
-            agg = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", mfpt)
-                .parquet(src)
-                .groupBy("user_id")
-                .agg(
-                    F.count(F.lit(1)).alias("n_events"),
-                    F.sum(F.col("value").cast("decimal(30,6)")).alias("__sum_dec"),
-                )
-                .select(
-                    "user_id",
-                    "n_events",
-                    F.col("__sum_dec").cast("double").alias("sum_value"),
-                )
+        run = replay.available_now(
+            spark, src, ckpt,
+            lambda s: s.groupBy("user_id")
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                F.sum(F.col("value").cast("decimal(30,6)")).alias("__sum_dec"),
             )
-            q = (
-                agg.writeStream.foreachBatch(upsert)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
+            .select(
+                "user_id",
+                "n_events",
+                F.col("__sum_dec").cast("double").alias("sum_value"),
             )
-            q.awaitTermination()
-
-        _replay_two_drops(spark, ch_lo, ch_hi, src, ckpt, run_available)
-        _keep_until_exit(work, keep=os.path.join(work, "serving"))
+            .writeStream.foreachBatch(upsert)
+            .outputMode("update"),
+        )
+        replay.replay_two_drops(spark, ch_lo, ch_hi, src, ckpt, run)
         return serving.query().select("user_id", "n_events", "sum_value")
-    except BaseException:
-        shutil.rmtree(work, ignore_errors=True)
-        raise
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 SQL_STREAM_AGG_MATERIALIZE = """
@@ -8315,6 +7793,17 @@ SELECT user_id, count(*) AS n_events,
        CAST(sum(CAST(value AS DECIMAL(30,6))) AS DOUBLE) AS sum_value
 FROM events GROUP BY user_id
 """
+
+
+# The applyInPandasWithState pair (stream_sessionize, stream_funnel):
+# state-store partition count sized to the key cardinality (thousands
+# of users), not the batch-analytics core count — every state
+# partition costs provider init/commit per micro-batch; and no-data
+# micro-batches off (see q_stream_sessionize).
+_STATEFUL_REPLAY = {
+    **_SHUFFLE_8,
+    "spark.sql.streaming.noDataMicroBatches.enabled": "false",
+}
 
 
 def q_stream_sessionize(spark, sf):
@@ -8340,9 +7829,6 @@ def q_stream_sessionize(spark, sf):
     outlives the span), so the watermark-advance batch does pure
     state-commit work — A/B'd output-identical, min-of-3
     5.15 -> 3.51 s."""
-    import shutil
-    import tempfile
-
     from platypus_ingestion_plugins_spark.streaming.stateful import sessionize_stream
 
     ev = _t(spark, sf, "events")
@@ -8353,40 +7839,25 @@ def q_stream_sessionize(spark, sf):
     e = ev.select(F.col("user_id").cast("string").alias("k"), sec.alias("t"))
     e_lo, e_hi = _median_split(e, "t")
 
-    work = _stream_scratch("stream_sess_")
-    # state-store partition count is fixed at the first checkpoint from
-    # spark.sql.shuffle.partitions; size it to the key cardinality
-    # (thousands of users), not the batch-analytics core count — every
-    # state partition costs provider init/commit per micro-batch
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_nodata = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
+    with replay.scratch(spark, "stream_sess_", _STATEFUL_REPLAY, keep="out") as work:
         src = os.path.join(work, "src")
         out = os.path.join(work, "out")
         ckpt = os.path.join(work, "ckpt")
-
-        def xform(stream):
-            # late_s beyond the table's time span: eviction never fires
-            # on this finite replay, so closed-session output equals the
-            # batch engine's (the oracle); the eviction path itself is
-            # covered by test_streaming_stateful.py::test_sessionize_state_eviction
-            return sessionize_stream(
-                stream, key_col="k", ts_col="t", gap_s=1800, late_s=10**9
+        # late_s beyond the table's time span: eviction never fires
+        # on this finite replay, so closed-session output equals the
+        # batch engine's (the oracle); the eviction path itself is
+        # covered by test_streaming_stateful.py::test_sessionize_state_eviction
+        run = replay.available_now(
+            spark, src, ckpt,
+            lambda s: sessionize_stream(
+                s, key_col="k", ts_col="t", gap_s=1800, late_s=10**9
             )
-
-        _run_two_drop_stream(spark, e_lo, e_hi, src, out, ckpt, xform)
-        _keep_until_exit(work, keep=out)
+            .writeStream.format("parquet")
+            .option("path", out)
+            .outputMode("append"),
+        )
+        replay.replay_two_drops(spark, e_lo, e_hi, src, ckpt, run)
         return spark.read.parquet(out)
-    except BaseException:
-        shutil.rmtree(work, ignore_errors=True)
-        raise
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata)
 
 
 def q_stream_funnel(spark, sf):
@@ -8404,8 +7875,6 @@ def q_stream_funnel(spark, sf):
     replay + no-data-batch suppression as q_stream_sessionize (see its
     docstring); A/B'd output-identical at sf0.1, min-of-3
     5.83 -> 4.25 s (scripts/ab_stream_drops.py)."""
-    import shutil
-
     from platypus_ingestion_plugins_spark.streaming.stateful import (
         funnel_stream,
     )
@@ -8422,37 +7891,21 @@ def q_stream_funnel(spark, sf):
     )
     e_lo, e_hi = _median_split(e, "t")
 
-    work = _stream_scratch("stream_funnel_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_nodata = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
+    with replay.scratch(spark, "stream_funnel_", _STATEFUL_REPLAY, keep="out") as work:
         src = os.path.join(work, "src")
         out = os.path.join(work, "out")
         ckpt = os.path.join(work, "ckpt")
-
-        def xform(stream):
-            return funnel_stream(
-                stream,
-                "k",
-                "t",
-                "et",
-                ["view", "click", "purchase"],
-                late_s=10**9,
+        run = replay.available_now(
+            spark, src, ckpt,
+            lambda s: funnel_stream(
+                s, "k", "t", "et", ["view", "click", "purchase"], late_s=10**9
             )
-
-        _run_two_drop_stream(spark, e_lo, e_hi, src, out, ckpt, xform)
-        _keep_until_exit(work, keep=out)
+            .writeStream.format("parquet")
+            .option("path", out)
+            .outputMode("append"),
+        )
+        replay.replay_two_drops(spark, e_lo, e_hi, src, ckpt, run)
         return spark.read.parquet(out)
-    except BaseException:
-        shutil.rmtree(work, ignore_errors=True)
-        raise
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata)
 
 
 SQL_STREAM_FUNNEL = """
@@ -9476,8 +8929,6 @@ def q_tar_scrub(spark, sf):
     scrubbed ids exactly — a key surviving the scrub, or an innocent
     sample lost from a rewritten or preserved shard, breaks the
     hash."""
-    import shutil
-
     from platypus_ingestion_plugins_spark.operators.export import (
         export_tar_shards,
         read_tar_shards,
@@ -9486,21 +8937,16 @@ def q_tar_scrub(spark, sf):
 
     docs = _t(spark, sf, "documents").select("doc_id", "text")
     victims = [r.doc_id for r in docs.filter("doc_id % 97 = 0").collect()]
-    work = _stream_scratch("tar_scrub_")
-    out = os.path.join(work, "wds")
-    try:
+    with replay.scratch(spark, "tar_scrub_", keep="wds") as work:
+        out = os.path.join(work, "wds")
         export_tar_shards(docs, out, "doc_id", {"text": "txt"}, n_shards=8)
         res = scrub_tar_shards(spark, out, {"text": "txt"}, victims)
         if res["n_deleted"] != len(victims):
             raise RuntimeError(f"scrub removed {res['n_deleted']}, "
                                f"expected {len(victims)}")
-        _keep_until_exit(work, keep=out)
         return read_tar_shards(
             spark, out, {"txt": "text"}, key_name="k"
         ).select(F.col("k").cast("long").alias("doc_id"), "text")
-    except BaseException:
-        shutil.rmtree(work, ignore_errors=True)
-        raise
 
 
 SQL_TAR_SCRUB = """
@@ -9611,8 +9057,6 @@ def q_stream_profile(spark, sf):
     from the per-source KMV state — all three under the shared
     epoch-pinned commit, all deterministic, so the oracle reproduces
     every number including the estimates."""
-    import shutil
-
     from platypus_ingestion_plugins_spark.operators.profile import (
         profile_merge_into,
         profile_read,
@@ -9620,43 +9064,28 @@ def q_stream_profile(spark, sf):
 
     d = _t(spark, sf, "documents").select("doc_id", "source", "text")
     lo, hi = _median_split(d, "doc_id")
-    work = _stream_scratch("stream_prof_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with replay.scratch(spark, "stream_prof_", _SHUFFLE_8) as work:
         src = os.path.join(work, "src")
         ckpt = os.path.join(work, "ckpt")
         state = os.path.join(work, "profile")
-
-        def run_available(mfpt, schema):
-            q = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", mfpt)
-                .parquet(src)
-                .writeStream.foreachBatch(
-                    lambda b, bid: profile_merge_into(
-                        b, "text", "doc_id", "source", state,
-                        k=256, batch_id=bid,
-                    )
+        run = replay.available_now(
+            spark, src, ckpt,
+            lambda s: s.writeStream.foreachBatch(
+                lambda b, bid: profile_merge_into(
+                    b, "text", "doc_id", "source", state,
+                    k=256, batch_id=bid,
                 )
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-        _replay_two_drops(spark, lo, hi, src, ckpt, run_available)
+            ),
+        )
+        replay.replay_two_drops(spark, lo, hi, src, ckpt, run)
         out = profile_read(spark, state, "source").select(
             "source", "n_docs", "n_tokens", "n_chars",
             "chars_p50", "chars_p90", "chars_p99",
             "est_distinct_texts", "est_dup_ratio",
         )
-        # materialize before the scratch dir is scheduled for cleanup
+        # materialize before the scratch dir is removed
         rows = out.collect()
         return spark.createDataFrame(rows, out.schema)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def _sql_stream_profile(m: int = 64, k: int = 256) -> str:
@@ -10502,8 +9931,6 @@ def q_update_by_query(spark, sf):
     commit log); the readback is the oracle's CASE-and-exclude replay
     — the update semantics and the delete's read-your-writes are
     value-checked end to end."""
-    import shutil
-
     from platypus_ingestion_plugins_spark.serving.table import (
         ServingTable,
         delete_by_query,
@@ -10513,8 +9940,7 @@ def q_update_by_query(spark, sf):
     d = _t(spark, sf, "documents").select(
         "doc_id", "lang", "source", "n_chars"
     )
-    work = _stream_scratch("ubq_")
-    try:
+    with replay.scratch(spark, "ubq_", keep="tbl") as work:
         tbl = ServingTable(spark, os.path.join(work, "tbl"), key="doc_id")
         tbl.overwrite(d)
         update_by_query(
@@ -10523,12 +9949,7 @@ def q_update_by_query(spark, sf):
             {"n_chars": F.col("n_chars") + F.lit(100000)},
         )
         delete_by_query(tbl, F.col("source") == "src3")
-        out = tbl.query()
-        _keep_until_exit(work, keep=os.path.join(work, "tbl"))
-        return out
-    except BaseException:
-        shutil.rmtree(work, ignore_errors=True)
-        raise
+        return tbl.query()
 
 
 SQL_UPDATE_BY_QUERY = """
@@ -11197,8 +10618,6 @@ def q_stream_ewma_anomalies(spark, sf):
     two drops through a real checkpointed foreachBatch and the
     post-stream answer equals batch ewma_anomalies over everything
     ingested (the oracle)."""
-    import shutil
-
     from platypus_ingestion_plugins_spark.operators.analytics import (
         ewma_anomalies_read,
         hourly_counts_merge_into,
@@ -11206,37 +10625,22 @@ def q_stream_ewma_anomalies(spark, sf):
 
     d = _events_ts(spark, sf).select("event_id", "ts", "event_type")
     lo, hi = _median_split(d, "event_id")
-    work = _stream_scratch("stream_ewma_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with replay.scratch(spark, "stream_ewma_", _SHUFFLE_8) as work:
         src = os.path.join(work, "src")
         ckpt = os.path.join(work, "ckpt")
         state = os.path.join(work, "hourly")
-
-        def run_available(mfpt, schema):
-            q = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", mfpt)
-                .parquet(src)
-                .writeStream.foreachBatch(
-                    lambda b, bid: hourly_counts_merge_into(
-                        b, "ts", "event_type", state, batch_id=bid
-                    )
+        run = replay.available_now(
+            spark, src, ckpt,
+            lambda s: s.writeStream.foreachBatch(
+                lambda b, bid: hourly_counts_merge_into(
+                    b, "ts", "event_type", state, batch_id=bid
                 )
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-        _replay_two_drops(spark, lo, hi, src, ckpt, run_available)
+            ),
+        )
+        replay.replay_two_drops(spark, lo, hi, src, ckpt, run)
         out = ewma_anomalies_read(spark, state)
         rows = out.collect()
         return spark.createDataFrame(rows, out.schema)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def q_ab_cuped(spark, sf):

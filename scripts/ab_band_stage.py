@@ -17,7 +17,6 @@ Usage: python scripts/ab_band_stage.py [sf_dir] [passes]
 """
 
 import os
-import shutil
 import sys
 import time
 
@@ -27,6 +26,7 @@ import __spark_entry__ as E
 from platypus_ingestion_plugins_spark import concurrency
 from platypus_ingestion_plugins_spark.operators import dedup
 from platypus_ingestion_plugins_spark.session import get_spark
+from platypus_ingestion_plugins_spark.streaming import replay
 
 
 def run_arm(spark, sf, overlapped: bool):
@@ -34,19 +34,16 @@ def run_arm(spark, sf, overlapped: bool):
     docs_lo, docs_hi = E._median_split(docs, "doc_id")
     keys_lo = dedup.simhash_band_keys(docs_lo, "text", "doc_id", bits=32, bands=4)
     keys_hi = dedup.simhash_band_keys(docs_hi, "text", "doc_id", bits=32, bands=4)
-    work = E._stream_scratch("ab_band_")
-    idx = os.path.join(work, "index")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    t0 = time.monotonic()
-    try:
+    with replay.scratch(spark, "ab_band_", E._SHUFFLE_8) as work:
+        idx = os.path.join(work, "index")
+        t0 = time.monotonic()
         if overlapped:
             side = os.path.join(work, "index_staging")
             concurrency.overlap_jobs(
                 lambda: dedup.append_band_key_index(keys_lo, idx, val_buckets=4),
                 lambda: dedup.append_band_key_index(keys_hi, side, val_buckets=4),
             )
-            E._merge_partitioned_files(side, idx)
+            replay.merge_partitioned_files(side, idx)
         else:
             dedup.append_band_key_index(keys_lo, idx, val_buckets=4)
             dedup.append_band_key_index(keys_hi, idx, val_buckets=4)
@@ -59,9 +56,6 @@ def run_arm(spark, sf, overlapped: bool):
             .collect()
         )
         return round(time.monotonic() - t0, 3), rows
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def main():

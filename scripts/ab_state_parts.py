@@ -18,7 +18,6 @@ values. Usage: python scripts/ab_state_parts.py [sf_dir] [passes]
 from __future__ import annotations
 
 import os
-import shutil
 import sys
 import time
 
@@ -27,10 +26,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as E
 from pyspark.sql import functions as F
 from platypus_ingestion_plugins_spark.session import get_spark
+from platypus_ingestion_plugins_spark.streaming import replay
 from platypus_ingestion_plugins_spark.streaming.stateful import (
     funnel_stream,
     sessionize_stream,
 )
+
+PARTS = "spark.sql.shuffle.partitions"
 
 
 def run_funnel(spark, sf, parts: int) -> tuple[float, int]:
@@ -46,43 +48,25 @@ def run_funnel(spark, sf, parts: int) -> tuple[float, int]:
         F.col("event_type").alias("et"),
     )
     e_lo, e_hi = E._median_split(e, "t")
-    work = E._stream_scratch("ab_funnel_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    t0 = time.monotonic()
-    try:
+    with replay.scratch(spark, "ab_funnel_", {PARTS: str(parts)}) as work:
+        t0 = time.monotonic()
         src, out, ckpt = (os.path.join(work, n) for n in ("src", "out", "ckpt"))
         e_lo.coalesce(4).write.mode("append").parquet(src)
         schema = spark.read.parquet(src).schema
-
-        def run_available():
-            stream = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 100)
-                .parquet(src)
+        run = replay.available_now(
+            spark, src, ckpt,
+            lambda s: funnel_stream(
+                s, "k", "t", "et", ["view", "click", "purchase"], late_s=10**9
             )
-            q = (
-                funnel_stream(
-                    stream, "k", "t", "et",
-                    ["view", "click", "purchase"], late_s=10**9,
-                )
-                .writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-        run_available()
+            .writeStream.format("parquet")
+            .option("path", out)
+            .outputMode("append"),
+        )
+        run(100, schema)
         e_hi.coalesce(4).write.mode("append").parquet(src)
-        run_available()
+        run(100, schema)
         n = spark.read.parquet(out).count()
         return time.monotonic() - t0, n
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def run_sessionize(spark, sf, parts: int) -> tuple[float, int]:
@@ -94,41 +78,25 @@ def run_sessionize(spark, sf, parts: int) -> tuple[float, int]:
     )
     e = ev.select(F.col("user_id").cast("string").alias("k"), sec.alias("t"))
     e_lo, e_hi = E._median_split(e, "t")
-    work = E._stream_scratch("ab_sess_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    t0 = time.monotonic()
-    try:
+    with replay.scratch(spark, "ab_sess_", {PARTS: str(parts)}) as work:
+        t0 = time.monotonic()
         src, out, ckpt = (os.path.join(work, n) for n in ("src", "out", "ckpt"))
         e_lo.coalesce(4).write.mode("append").parquet(src)
         schema = spark.read.parquet(src).schema
-
-        def run_available():
-            stream = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 100)
-                .parquet(src)
+        run = replay.available_now(
+            spark, src, ckpt,
+            lambda s: sessionize_stream(
+                s, key_col="k", ts_col="t", gap_s=1800, late_s=10**9
             )
-            q = (
-                sessionize_stream(stream, key_col="k", ts_col="t",
-                                  gap_s=1800, late_s=10**9)
-                .writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-        run_available()
+            .writeStream.format("parquet")
+            .option("path", out)
+            .outputMode("append"),
+        )
+        run(100, schema)
         e_hi.coalesce(4).write.mode("append").parquet(src)
-        run_available()
+        run(100, schema)
         n = spark.read.parquet(out).count()
         return time.monotonic() - t0, n
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def main() -> None:

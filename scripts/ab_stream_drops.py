@@ -36,7 +36,6 @@ Usage: python scripts/ab_stream_drops.py [sf_dir] [passes]
 
 import json
 import os
-import shutil
 import sys
 import time
 
@@ -46,6 +45,7 @@ from pyspark.sql import functions as F
 
 import __spark_entry__ as E
 from platypus_ingestion_plugins_spark.session import get_spark
+from platypus_ingestion_plugins_spark.streaming import replay
 from platypus_ingestion_plugins_spark.streaming.stateful import (
     funnel_stream,
     sessionize_stream,
@@ -101,17 +101,10 @@ def _offsets_files(ckpt):
 
 def run_arm(spark, query, sf, arm):
     lo, hi = _events(spark, sf, with_et=(query == "funnel"))
-    work = E._stream_scratch(f"ab_drops_{query}_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_nodata = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    if arm.endswith("nodata0"):
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    conf = E._STATEFUL_REPLAY if arm.endswith("nodata0") else E._SHUFFLE_8
     phases = {}
-    t_all = time.monotonic()
-    try:
+    with replay.scratch(spark, f"ab_drops_{query}_", conf) as work:
+        t_all = time.monotonic()
         src = os.path.join(work, "src")
         out = os.path.join(work, "out")
         ckpt = os.path.join(work, "ckpt")
@@ -122,29 +115,20 @@ def run_arm(spark, query, sf, arm):
             phases[name] = round(time.monotonic() - t0, 3)
             return r
 
-        def run_available(mfpt):
-            stream = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", mfpt)
-                .parquet(src)
-            )
-            q = (
-                _stream_of(query, stream)
-                .writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        run = replay.available_now(
+            spark, src, ckpt,
+            lambda s: _stream_of(query, s)
+            .writeStream.format("parquet")
+            .option("path", out)
+            .outputMode("append"),
+        )
 
         timed("write_lo", lambda: lo.coalesce(4).write.mode("append").parquet(src))
         schema = spark.read.parquet(src).schema
         if arm.startswith("two_runs"):
-            timed("run1", lambda: run_available(100))
+            timed("run1", lambda: run(100, schema))
             timed("write_hi", lambda: hi.coalesce(4).write.mode("append").parquet(src))
-            timed("run2", lambda: run_available(100))
+            timed("run2", lambda: run(100, schema))
         else:
             lo_files = set(_list_parquet(src))
             timed("write_hi", lambda: hi.coalesce(4).write.mode("append").parquet(src))
@@ -152,7 +136,7 @@ def run_arm(spark, query, sf, arm):
             assert len(hi_files) <= len(lo_files), (
                 f"hi drop has more files ({len(hi_files)}) than lo "
                 f"({len(lo_files)}) — one-run batching would split it")
-            timed("run_single", lambda: run_available(len(lo_files)))
+            timed("run_single", lambda: run(len(lo_files), schema))
             # prove the batch boundary followed the drop boundary
             ob = _offsets_files(ckpt)
             assert sorted(ob[0]) == sorted(lo_files), (
@@ -164,11 +148,6 @@ def run_arm(spark, query, sf, arm):
         )
         phases["total"] = round(time.monotonic() - t_all, 3)
         return phases, rows
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 ARMS = ["two_runs", "two_runs_nodata0", "one_run", "one_run_nodata0"]

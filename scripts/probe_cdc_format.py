@@ -30,6 +30,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as E  # noqa: E402
 from platypus_ingestion_plugins_spark.session import get_spark  # noqa: E402
+from platypus_ingestion_plugins_spark.streaming import replay  # noqa: E402
 
 
 def main() -> None:
@@ -69,33 +70,30 @@ def main() -> None:
             .alias("_row_kind"),
         )
         ch_lo, ch_hi = E._median_split(ch, "_seq")
-        work = E._stream_scratch("probe_cdcf_")
-        log = os.path.join(work, "log")
-        cdc_table.write_cdc_snapshot(ch_lo, log, snapshot_id=1)
-        cdc_table.write_cdc_snapshot(ch_hi, log, snapshot_id=2)
-        t1 = time.perf_counter()
-        register_cdc_table_source(spark)
-        back = (
-            spark.read.format("cdc-table")
-            .option("last_snapshot", 0)
-            .load(log)
-            .drop("_snapshot")
-        )
-        out = cdc.apply_changelog(back, "user_id").select(
-            "user_id", "event_type", "value"
-        )
-        t2 = time.perf_counter()
-        n = out.count()
-        t3 = time.perf_counter()
+        with replay.scratch(spark, "probe_cdcf_") as work:
+            log = os.path.join(work, "log")
+            cdc_table.write_cdc_snapshot(ch_lo, log, snapshot_id=1)
+            cdc_table.write_cdc_snapshot(ch_hi, log, snapshot_id=2)
+            t1 = time.perf_counter()
+            register_cdc_table_source(spark)
+            back = (
+                spark.read.format("cdc-table")
+                .option("last_snapshot", 0)
+                .load(log)
+                .drop("_snapshot")
+            )
+            out = cdc.apply_changelog(back, "user_id").select(
+                "user_id", "event_type", "value"
+            )
+            t2 = time.perf_counter()
+            n = out.count()
+            t3 = time.perf_counter()
         if rows_ref is None:
             rows_ref = n
         assert n == rows_ref, f"row drift: {n} vs {rows_ref}"
         phases["write"].append(t1 - t0)
         phases["plan"].append(t2 - t1)
         phases["exec"].append(t3 - t2)
-        import shutil
-
-        shutil.rmtree(work, ignore_errors=True)
         # --- whole entry, interleaved ---
         t4 = time.perf_counter()
         m = E.queries()["cdc_format_last_wins"](spark, sf_dir).count()

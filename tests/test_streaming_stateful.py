@@ -9,6 +9,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from platypus_ingestion_plugins_spark.streaming import replay
 from platypus_ingestion_plugins_spark.streaming.stateful import sessionize_stream
 from platypus_ingestion_plugins_spark.streaming.windows import (
     windowed_counts,
@@ -24,6 +25,17 @@ def _drop(spark, src, rows):
     spark.createDataFrame([Row(k=k, ts=t) for k, t in rows], EV_SCHEMA).coalesce(
         1
     ).write.mode("append").parquet(src)
+
+
+def _parquet_sink(transform, out):
+    """replay.available_now sink: the transformed stream appended as
+    parquet to ``out``."""
+    return lambda stream: (
+        transform(stream)
+        .writeStream.format("parquet")
+        .option("path", out)
+        .outputMode("append")
+    )
 
 
 def _run_stream(spark, src, ckpt, out, transform):
@@ -527,12 +539,10 @@ def test_funnel_stream_hot_user_state_bounded(spark, tmp_path):
 
 def test_two_drop_single_run_equals_two_runs(spark, tmp_path):
     """The r17 drop shape (one availableNow query, two micro-batches,
-    no-data batches off — __spark_entry__._run_two_drop_stream) must
+    no-data batches off — streaming.replay.replay_two_drops) must
     reproduce the two-run replay byte for byte: the only thing that
     changed is how many query starts the replay pays, not what crosses
     the state store."""
-    import __spark_entry__ as E
-
     rows_lo = [("a", 10), ("a", 100), ("b", 10)]
     rows_hi = [("a", 5000), ("b", 20), ("b", 9000)]
 
@@ -570,9 +580,10 @@ def test_two_drop_single_run_equals_two_runs(spark, tmp_path):
     prev = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
     spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     try:
-        E._run_two_drop_stream(
+        replay.replay_two_drops(
             spark, build(rows_lo).coalesce(1), build(rows_hi).coalesce(1),
-            src2, out2, ckpt2, xform,
+            src2, ckpt2, replay.available_now(
+                spark, src2, ckpt2, _parquet_sink(xform, out2)),
         )
     finally:
         spark.conf.set(
@@ -593,8 +604,6 @@ def test_two_drop_fallback_when_hi_fragments(spark, tmp_path):
     """If the second drop has MORE files than the first, single-run
     batching would split it mid-drop — the helper must fall back to
     the two-run shape and still produce the identical result."""
-    import __spark_entry__ as E
-
     rows_lo = [("a", 10), ("a", 100)]
     rows_hi = [("a", 5000), ("a", 9000), ("a", 20000), ("a", 40000)]
 
@@ -610,7 +619,10 @@ def test_two_drop_fallback_when_hi_fragments(spark, tmp_path):
         [Row(k=k, t=t) for k, t in rows_hi], "k string, t long"
     ).repartition(4)  # 4 files > lo's 1 -> fallback branch
     src, ckpt, out = (str(tmp_path / n) for n in ("s", "c", "o"))
-    E._run_two_drop_stream(spark, lo, hi, src, out, ckpt, xform)
+    replay.replay_two_drops(
+        spark, lo, hi, src, ckpt,
+        replay.available_now(spark, src, ckpt, _parquet_sink(xform, out)),
+    )
     got = sorted(
         (r["key"], r["session_start"], r["session_end"], r["n_events"])
         for r in spark.read.parquet(out).collect()
