@@ -27,6 +27,8 @@ from functools import reduce
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from platypus_ingestion_plugins_spark import fs as _fs
+
 _HASH_SPACE = float(16**15)
 
 
@@ -146,16 +148,6 @@ def countmin_counters(df, col: str, depth: int = 4, width: int = 256):
     )
 
 
-def _sketch_heal(spark, path: str) -> None:
-    """Promote a parked sketch table left by a crash mid-swap: the
-    park is the only durable copy once the main dir is gone."""
-    from .. import fs as _fs
-
-    park = path + ".old"
-    if not _fs.exists(spark, path) and _fs.exists(spark, park):
-        _fs._rename_or_raise(spark, park, path)
-
-
 def _merge_sketch_into(batch, path: str, merge_fn, batch_id: int | None) -> None:
     """The shared streaming-maintenance commit for ANY mergeable
     sketch: ``merge_fn(batch, prev_or_None) -> merged state frame``,
@@ -167,29 +159,23 @@ def _merge_sketch_into(batch, path: str, merge_fn, batch_id: int | None) -> None
     directory — the same atomic unit as the state — and a replayed
     batch with ``batch_id <= pinned`` is skipped: at-least-once
     delivery becomes exactly-once sketch state."""
-    from .. import fs as _fs
-
     spark = batch.sparkSession
-    _sketch_heal(spark, path)
-    if batch_id is not None and _fs.exists(spark, f"{path}/_epoch"):
+    _fs.heal_swap(spark, path, path + ".old")
+    if batch_id is not None:
         pinned = _fs.read_text(spark, f"{path}/_epoch")
         if pinned is not None and batch_id <= int(pinned):
             return  # replayed batch: already folded in
     prev = spark.read.parquet(path) if _fs.exists(spark, path) else None
     merged = merge_fn(batch, prev)
-    staging = path + ".staging"
-    park = path + ".old"
-    _fs.delete(spark, staging)
-    # coalesce(1): sketch state is KBs by construction — one file
-    # keeps the per-batch read-back a single-split scan
-    merged.coalesce(1).write.parquet(staging)
-    if batch_id is not None:
-        _fs.write_text(spark, f"{staging}/_epoch", str(batch_id))
-    _fs.delete(spark, park)
-    if _fs.exists(spark, path):
-        _fs._rename_or_raise(spark, path, park)
-    _fs._rename_or_raise(spark, staging, path)
-    _fs.delete(spark, park)
+
+    def write(staging: str) -> None:
+        # coalesce(1): sketch state is KBs by construction — one file
+        # keeps the per-batch read-back a single-split scan
+        merged.coalesce(1).write.parquet(staging)
+        if batch_id is not None:
+            _fs.write_text(spark, f"{staging}/_epoch", str(batch_id))
+
+    _fs.swap_dir(spark, path, path + ".staging", path + ".old", write)
 
 
 def countmin_merge_into(
@@ -283,7 +269,7 @@ def kmin_state_estimate(m: int, prefix: str = "__kmin"):
 def sketch_read(spark, path: str):
     """The accumulated sketch state (heal-on-read): counters for
     ``countmin_estimate``, or the (u, v) sample for quantiles."""
-    _sketch_heal(spark, path)
+    _fs.heal_swap(spark, path, path + ".old")
     return spark.read.parquet(path)
 
 

@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from platypus_ingestion_plugins_spark import fs as _fs
 from platypus_ingestion_plugins_spark.functions.text import tokens
 from platypus_ingestion_plugins_spark.session import ensure_parallelism
 
@@ -310,11 +311,7 @@ def line_count_index_exists(spark, path: str) -> bool:
     index (which the next heal would delete: silent total loss of
     every accumulated count). Every entry point heals — the
     ServingTable recover-on-any-entry discipline."""
-    from .. import fs as _fs
-
     _heal_line_count_index(spark, path)
-    if not _fs.exists(spark, path):
-        return False
     return any(n.startswith("kb=") for n in _fs.list_names(spark, path))
 
 
@@ -352,20 +349,10 @@ def append_line_count_index(
     (``exclude_batch_id``): folding them into the untagged aggregate
     would make the re-append double-count. The fragmentation check is
     a listing bounded by ``key_buckets``, not corpus size."""
-    from .. import fs as _fs
-
     spark = counts.sparkSession
     _heal_line_count_index(spark, path)
-    marker = f"{path}/_key_buckets"
-    pinned = _fs.read_text(spark, marker) if _fs.exists(spark, marker) else None
-    if pinned is not None and int(pinned) != key_buckets:
-        raise ValueError(
-            f"index at {path} was written with key_buckets={pinned}, "
-            f"append requested {key_buckets}"
-        )
-    if pinned is None:
-        _fs.write_text_atomic(spark, marker, str(key_buckets))
-    if auto_compact_max_files is not None and _fs.exists(spark, path):
+    _fs.check_pin(spark, path, "_key_buckets", key_buckets, "append", pin=True)
+    if auto_compact_max_files is not None:
         compact_line_count_index(
             spark, path, max_files_per_bucket=auto_compact_max_files,
             exclude_batch_id=None if batch_id is None else str(batch_id),
@@ -385,16 +372,8 @@ def append_line_count_index(
 
 def _heal_line_count_index(spark, path: str) -> None:
     """Restore a line-count index caught between the two renames of a
-    compaction swap (only ``<path>__old`` exists) and drop leftovers a
-    completed swap didn't get to delete."""
-    from .. import fs as _fs
-
-    old = path + "__old"
-    if not _fs.exists(spark, path) and _fs.exists(spark, old):
-        _fs._rename_or_raise(spark, old, path)
-    if _fs.exists(spark, path):
-        _fs.delete(spark, old)
-        _fs.delete(spark, path + "__staging")
+    compaction swap and drop leftovers (``fs.heal_swap``)."""
+    _fs.heal_swap(spark, path, path + "__old", path + "__staging")
 
 
 def compact_line_count_index(
@@ -405,13 +384,10 @@ def compact_line_count_index(
     one file per touched kb= directory) down to one summed file per
     bucket. Counts are NOT idempotent — re-merging a parked file, the
     band-key compactor's heal, would double-count and over-suppress —
-    so the rewrite is a WHOLE-INDEX staged swap with the serving
-    table's two-rename discipline: build ``<path>__staging``, rename
-    the live index aside to ``<path>__old``, rename staging in, delete
-    the old copy. A crash between the renames leaves the aside copy as
-    the only index; the next compact or pruned read heals by restoring
-    it (``_heal_line_count_index``). Returns True when a rewrite
-    happened.
+    so the rewrite is a WHOLE-INDEX ``fs.swap_dir`` through
+    ``<path>__staging`` and the ``<path>__old`` park; the next compact
+    or pruned read heals a crash between the renames. Returns True
+    when a rewrite happened.
 
     ``exclude_batch_id``: rows tagged with that epoch pass through the
     rewrite UN-folded (still tagged). Required when compacting while
@@ -420,27 +396,10 @@ def compact_line_count_index(
     into the untagged aggregate would defeat the reader's
     (line_key, batch_id) replay collapse and double-count on
     replay."""
-    from .. import fs as _fs
-
     _heal_line_count_index(spark, path)
-    if not _fs.exists(spark, path):
-        return False
-    fragmented = False
-    for name in _fs.list_names(spark, path):
-        if name.startswith("kb="):
-            files = [
-                n
-                for n in _fs.list_names(spark, f"{path}/{name}")
-                if n.endswith(".parquet")
-            ]
-            if len(files) > max_files_per_bucket:
-                fragmented = True
-                break
-    if not fragmented:
+    if not _fs.fragmented_dirs(spark, path, ("kb",), max_files_per_bucket):
         return False
     pinned = _fs.read_text(spark, f"{path}/_key_buckets")
-    staging = path + "__staging"
-    old = path + "__old"
     src = spark.read.parquet(path)
     in_flight = None
     if "batch_id" in src.columns:
@@ -466,17 +425,13 @@ def compact_line_count_index(
         folded = folded.unionByName(
             in_flight.select("kb", "line_key", "n", "batch_id")
         )
-    (
-        folded.repartition("kb")
-        .write.mode("overwrite")
-        .partitionBy("kb")
-        .parquet(staging)
-    )
-    if pinned is not None:
-        _fs.write_text_atomic(spark, f"{staging}/_key_buckets", pinned)
-    _fs._rename_or_raise(spark, path, old)
-    _fs._rename_or_raise(spark, staging, path)
-    _fs.delete(spark, old)
+
+    def write(staging: str) -> None:
+        folded.repartition("kb").write.partitionBy("kb").parquet(staging)
+        if pinned is not None:
+            _fs.write_text_atomic(spark, f"{staging}/_key_buckets", pinned)
+
+    _fs.swap_dir(spark, path, path + "__staging", path + "__old", write)
     return True
 
 
@@ -500,22 +455,8 @@ def read_line_counts_pruned(
     batch early, so replayed output diverges from the first
     attempt's). Pass the epoch id; rows tagged with it are excluded
     from the totals."""
-    from .. import fs as _fs
-
     _heal_line_count_index(spark, path)
-    marker = f"{path}/_key_buckets"
-    pinned = _fs.read_text(spark, marker) if _fs.exists(spark, marker) else None
-    if pinned is not None:
-        if key_buckets is not None and int(pinned) != key_buckets:
-            raise ValueError(
-                f"index at {path} was written with key_buckets={pinned}, "
-                f"read requested {key_buckets}"
-            )
-        key_buckets = int(pinned)
-    elif key_buckets is None:
-        raise ValueError(
-            f"index at {path} has no _key_buckets sidecar; pass key_buckets"
-        )
+    key_buckets = int(_fs.check_pin(spark, path, "_key_buckets", key_buckets))
     kbs = sorted(
         r["kb"]
         for r in batch_keys.select(
@@ -1840,22 +1781,10 @@ def append_band_key_index(
     append/compact. Callers that own a wider maintenance window (e.g.
     between drains) can keep this off and call the compactor
     directly."""
-    from .. import fs as _fs
-
     spark = keys.sparkSession
-    marker = f"{path}/_val_buckets"
-    pinned = _fs.read_text(spark, marker) if _fs.exists(spark, marker) else None
-    if pinned is not None and int(pinned) != val_buckets:
-        raise ValueError(
-            f"index at {path} was written with val_buckets={pinned}, "
-            f"append requested {val_buckets}"
-        )
-    if pinned is None:
-        _fs.write_text_atomic(spark, marker, str(val_buckets))
-    if auto_compact_max_files is not None and _fs.exists(spark, path):
-        compact_band_key_index(
-            spark, path, max_files_per_dir=auto_compact_max_files
-        )
+    _fs.check_pin(spark, path, "_val_buckets", val_buckets, "append", pin=True)
+    if auto_compact_max_files is not None:
+        compact_band_key_index(spark, path, max_files_per_dir=auto_compact_max_files)
     (
         keys.withColumn("vb", F.pmod(F.col("val"), F.lit(val_buckets)))
         .repartition("band", "vb")
@@ -1878,111 +1807,14 @@ def compact_band_key_index(
     Run between drains: the swap assumes no concurrent appender or
     reader on the directories it rewrites (the streaming loop owns the
     index, so scheduling compaction between ``availableNow`` runs is
-    the natural slot). All oversized directories are rewritten in ONE
-    Spark job (partition-pruned read of just those dirs, one shuffle
-    task per dir — the same single-pass shape as
-    ``ServingTable.compact``), staged under a dot-prefixed dir, then
-    swapped per-directory: park the original at a dot-prefixed
-    sibling, rename the staged copy in, drop the park. Renames are
-    checked (``fs._rename_or_raise`` — Hadoop rename reports failure
-    by returning false; proceeding would destroy the parked original),
-    and the next call heals any interrupted state before compacting
-    further: a parked original whose vb= dir is missing is restored by
-    rename; one whose vb= dir EXISTS is merged file-by-file into it
-    (never deleted outright — the live dir may be a post-crash append
-    recreation holding only new rows, so dropping the park would lose
-    every pre-crash key); stale staging is discarded. The merge can
-    re-add rows a completed swap already compacted — duplicate keys
-    are semantically idempotent here and the next compaction's
-    dropDuplicates absorbs them.
-    Dot-prefixed names keep every intermediate state invisible to
-    Spark's partition discovery, so a crash never breaks readers of
-    the rest of the index. Returns the directories rewritten."""
-    from .. import fs as _fs
-
-    staging = f"{path}/.compact_staging"
-    oversized: list[tuple[int, int]] = []
-    for band_name in sorted(_fs.list_names(spark, path)):
-        if not band_name.startswith("band="):
-            continue
-        band_dir = f"{path}/{band_name}"
-        # heal pass FIRST: a parked original whose vb= dir is missing
-        # would never be visited by the vb= scan below
-        for name in sorted(_fs.list_names(spark, band_dir)):
-            if name.startswith(".precompact-"):
-                parked_dir = f"{band_dir}/{name}"
-                orig = f"{band_dir}/{name[len('.precompact-'):]}"
-                if not _fs.exists(spark, orig):
-                    _fs._rename_or_raise(spark, parked_dir, orig)
-                else:
-                    # A live vb= dir beside a park does NOT prove the
-                    # swap finished: a crash between park and
-                    # swap-in, followed by a streaming append, would
-                    # RECREATE the vb= dir holding only post-crash
-                    # rows — deleting the park then would silently
-                    # drop every pre-crash key and re-admit their
-                    # near-duplicates. The index tolerates duplicate
-                    # keys (appends are replay-idempotent), so the
-                    # always-safe heal is to MERGE: move the park's
-                    # parquet files into the live dir and delete the
-                    # park only once it holds no data. If the swap
-                    # did finish, the staged dir was already deleted
-                    # and the park holds the only copy of its rows —
-                    # merging re-adds rows the compacted file already
-                    # has, which dedup semantics absorb.
-                    for f_name in sorted(_fs.list_names(spark, parked_dir)):
-                        if not f_name.endswith(".parquet"):
-                            continue  # checksum sidecars die with the park
-                        _fs.rename_numbered(
-                            spark, f"{parked_dir}/{f_name}", orig, f_name
-                        )
-                    _fs.delete(spark, parked_dir)
-            elif name.startswith(".compacting-"):
-                # stale per-dir staged copy from the pre-single-job
-                # algorithm's crashes — never referenced again
-                _fs.delete(spark, f"{band_dir}/{name}")
-        for vb_name in sorted(_fs.list_names(spark, band_dir)):
-            if not vb_name.startswith("vb="):
-                continue
-            files = [
-                n
-                for n in _fs.list_names(spark, f"{band_dir}/{vb_name}")
-                if n.endswith(".parquet")
-            ]
-            if len(files) > max_files_per_dir:
-                oversized.append(
-                    (int(band_name.split("=", 1)[1]), int(vb_name.split("=", 1)[1]))
-                )
-    _fs.delete(spark, staging)  # stale staging from a crash
-    if not oversized:
-        return []
-    pred = None
-    for band, vb in oversized:
-        c = (F.col("band") == band) & (F.col("vb") == vb)
-        pred = c if pred is None else pred | c
-    (
-        spark.read.parquet(path)
-        .filter(pred)  # partition-pruned: only the oversized dirs
-        # the index is a SET (appends are replay-idempotent, the
-        # crash-heal merges parked files back in): compaction is the
-        # place duplicate keys from replays/heals get absorbed, and
-        # the distinct rides the same shuffle the rewrite needs anyway
-        .dropDuplicates()
-        .repartition(len(oversized), "band", "vb")
-        .write.partitionBy("band", "vb")
-        .parquet(staging)
+    the natural slot). The rewrite is ``fs.compact_partition_dirs``:
+    one partition-pruned job for all oversized directories, a per-
+    directory park-and-swap, and a heal of any interrupted prior run
+    that merges a parked original back rather than dropping it.
+    Returns the directories rewritten."""
+    return _fs.compact_partition_dirs(
+        spark, path, ("band", "vb"), max_files_per_dir
     )
-    compacted: list[str] = []
-    for band, vb in oversized:
-        d = f"{path}/band={band}/vb={vb}"
-        staged = f"{staging}/band={band}/vb={vb}"
-        parked = f"{path}/band={band}/.precompact-vb={vb}"
-        _fs._rename_or_raise(spark, d, parked)
-        _fs._rename_or_raise(spark, staged, d)
-        _fs.delete(spark, parked)
-        compacted.append(d)
-    _fs.delete(spark, staging)
-    return compacted
 
 
 def read_band_keys_pruned(
@@ -2007,21 +1839,7 @@ def read_band_keys_pruned(
     sidecar; passing a value that disagrees with the sidecar raises
     (a mismatched bucket scheme would silently prune away matching
     directories)."""
-    from .. import fs as _fs
-
-    marker = f"{path}/_val_buckets"
-    pinned = _fs.read_text(spark, marker) if _fs.exists(spark, marker) else None
-    if pinned is not None:
-        if val_buckets is not None and int(pinned) != val_buckets:
-            raise ValueError(
-                f"index at {path} was written with val_buckets={pinned}, "
-                f"read requested {val_buckets}"
-            )
-        val_buckets = int(pinned)
-    elif val_buckets is None:
-        raise ValueError(
-            f"index at {path} has no _val_buckets sidecar; pass val_buckets"
-        )
+    val_buckets = int(_fs.check_pin(spark, path, "_val_buckets", val_buckets))
     pairs = (
         batch_keys.select(
             "band", F.pmod(F.col("val"), F.lit(val_buckets)).alias("vb")

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from platypus_ingestion_plugins_spark import fs as _fs
 from platypus_ingestion_plugins_spark.session import ensure_parallelism
 
 
@@ -709,23 +710,11 @@ def append_ivf_partitioned(
     vectors are append-idempotent under the compactor's
     ``dropDuplicates``, so mid-stream compaction is safe and a crashed
     swap heals on the next append."""
-    from .. import fs as _fs
-
     spark = emb.sparkSession
-    marker = f"{path}/_centroids_sha"
     fp = _centroids_fingerprint(centroids, id_col, vec_col)
-    pinned = _fs.read_text(spark, marker) if _fs.exists(spark, marker) else None
-    if pinned is not None and pinned != fp:
-        raise ValueError(
-            f"IVF layout at {path} is pinned to a different centroid set "
-            f"({pinned[:12]}… != {fp[:12]}…); rewrite the layout to re-train"
-        )
-    if pinned is None:
-        _fs.write_text_atomic(spark, marker, fp)
-    if auto_compact_max_files is not None and _fs.exists(spark, path):
-        compact_ivf_partitioned(
-            spark, path, max_files_per_dir=auto_compact_max_files
-        )
+    _fs.check_pin(spark, path, "_centroids_sha", fp, "append", pin=True)
+    if auto_compact_max_files is not None:
+        compact_ivf_partitioned(spark, path, max_files_per_dir=auto_compact_max_files)
     (
         ivf_assign(emb, centroids, id_col, vec_col)
         .repartition("cent_id")
@@ -739,73 +728,12 @@ def compact_ivf_partitioned(
     spark, path: str, max_files_per_dir: int = 4
 ) -> list[str]:
     """Rewrite fragmented ``cent_id=`` list directories to one file
-    each — the same single-job copy-park-swap crash discipline as
-    ``compact_band_key_index`` (dedup.py), one level deep: heal any
-    interrupted prior run first (a parked original whose live dir is
-    missing is restored by rename; one whose live dir EXISTS — a
-    post-crash append recreation — is MERGED file-by-file, never
-    deleted), rewrite all oversized lists in ONE partition-pruned job
-    with ``dropDuplicates`` (replay/heal idempotence), then swap each
-    directory via dot-prefixed park. Run between ingest batches; the
-    swap assumes no concurrent appender/reader on the rewritten
-    lists. Returns the directories rewritten."""
-    from .. import fs as _fs
-
-    staging = f"{path}/.compact_staging"
-    for name in sorted(_fs.list_names(spark, path)):
-        if name.startswith(".precompact-"):
-            parked = f"{path}/{name}"
-            orig = f"{path}/{name[len('.precompact-'):]}"
-            if not _fs.exists(spark, orig):
-                _fs._rename_or_raise(spark, parked, orig)
-            else:
-                for f_name in sorted(_fs.list_names(spark, parked)):
-                    if not f_name.endswith(".parquet"):
-                        continue
-                    _fs.rename_numbered(spark, f"{parked}/{f_name}", orig, f_name)
-                _fs.delete(spark, parked)
-    oversized = []
-    for name in sorted(_fs.list_names(spark, path)):
-        if not name.startswith("cent_id="):
-            continue
-        files = [
-            n
-            for n in _fs.list_names(spark, f"{path}/{name}")
-            if n.endswith(".parquet")
-        ]
-        if len(files) > max_files_per_dir:
-            oversized.append(name.split("=", 1)[1])
-    _fs.delete(spark, staging)
-    if not oversized:
-        return []
-
-    def _typed(s: str):
-        try:
-            return int(s)
-        except ValueError:
-            return s
-
-    (
-        spark.read.parquet(path)
-        # literal values in the partition column's own type: a cast on
-        # the column side would defeat PruneFileSourcePartitions
-        .filter(F.col("cent_id").isin([_typed(s) for s in oversized]))
-        .dropDuplicates()
-        .repartition(len(oversized), "cent_id")
-        .write.partitionBy("cent_id")
-        .parquet(staging)
-    )
-    compacted: list[str] = []
-    for cid in oversized:
-        d = f"{path}/cent_id={cid}"
-        staged = f"{staging}/cent_id={cid}"
-        parked = f"{path}/.precompact-cent_id={cid}"
-        _fs._rename_or_raise(spark, d, parked)
-        _fs._rename_or_raise(spark, staged, d)
-        _fs.delete(spark, parked)
-        compacted.append(d)
-    _fs.delete(spark, staging)
-    return compacted
+    each — ``fs.compact_partition_dirs``, the single-job copy-park-swap
+    ``compact_band_key_index`` (dedup.py) also runs, one level deep.
+    Run between ingest batches; the swap assumes no concurrent
+    appender/reader on the rewritten lists. Returns the directories
+    rewritten."""
+    return _fs.compact_partition_dirs(spark, path, ("cent_id",), max_files_per_dir)
 
 
 def ivf_probe_scan(

@@ -33,6 +33,21 @@ from platypus_ingestion_plugins_spark.serving.query import tokenize
 _SIDECAR = "_term_buckets"
 
 
+def _heal(spark: SparkSession, path: str) -> None:
+    """Restore an index a compaction crash left parked at ``<path>.old``
+    (``fs.heal_swap``). Every writer heals first: an append or
+    tombstone that recreated the live dir would shadow the park, and
+    the next compaction would drop it."""
+    _fs.heal_swap(spark, path, f"{path}.old")
+
+
+def _pinned_scheme(spark: SparkSession, path: str) -> str:
+    pinned = _fs.read_text(spark, f"{path}/{_SIDECAR}")
+    if pinned is None:
+        raise ValueError(f"no {_SIDECAR} sidecar at {path}; not a term index")
+    return pinned
+
+
 def _term_bucket(term_col, buckets: int):
     return F.pmod(F.xxhash64(term_col), F.lit(buckets)).cast("int")
 
@@ -66,16 +81,8 @@ def build_term_index(
         raise ValueError(f"buckets must be >= 1, got {buckets}")
     spark = df.sparkSession
     sidecar_val = f"{buckets}:pos" if positions else str(buckets)
-    pinned = (
-        _fs.read_text(spark, f"{path}/{_SIDECAR}")
-        if _fs.exists(spark, f"{path}/{_SIDECAR}")
-        else None
-    )
-    if pinned is not None and pinned != sidecar_val:
-        raise ValueError(
-            f"index at {path} was written with scheme {pinned!r}, "
-            f"write requested {sidecar_val!r}"
-        )
+    _heal(spark, path)
+    _fs.check_pin(spark, path, _SIDECAR, sidecar_val, "write")
     if positions:
         postings = df.select(
             F.col(id_col),
@@ -115,8 +122,7 @@ def _query_buckets(
     bucket VIA SPARK's own xxhash64 (a one-row local frame — no
     executor job, no Python hash that could drift from the writer's
     JVM hash). Returns (normalized terms, distinct buckets, buckets)."""
-    marker = f"{path}/{_SIDECAR}"
-    pinned = _fs.read_text(spark, marker) if _fs.exists(spark, marker) else None
+    pinned = _fs.read_text(spark, f"{path}/{_SIDECAR}")
     if pinned is not None:
         pinned_buckets = int(pinned.split(":", 1)[0])
         if buckets is not None and pinned_buckets != buckets:
@@ -202,6 +208,7 @@ def delete_docs(spark: SparkSession, path: str, ids: DataFrame) -> None:
         raise ValueError(
             f"delete_docs expects a one-column id frame, got {ids.columns}"
         )
+    _heal(spark, path)
     ids.write.mode("append").parquet(f"{path}/_deletes")
 
 
@@ -232,59 +239,38 @@ def compact_term_index(spark: SparkSession, path: str) -> None:
     layout (with tombstones still active — readers stay correct) or
     the compacted one; re-running heals. Steady-state append+compact
     keeps files-per-bucket plateaued, the band-key-index policy."""
-    # Heal a crashed prior compaction FIRST (the cdc compact_snapshots
-    # discipline): a crash between "path staged out" and "staging
-    # renamed in" leaves no live index — the .old park dir is the
-    # marker, and the ORIGINAL (tombstones still active, readers
-    # correct) is what gets restored; the staging dir's completeness
-    # is unknowable, so it is discarded, never promoted.
-    old = f"{path}.old"
-    if not _fs.exists(spark, path):
-        if _fs.exists(spark, old):
-            if not _fs.rename(spark, old, path):
-                raise IOError(f"could not restore {old} to {path}")
-        else:
-            raise ValueError(f"no term index at {path}")
-    marker = f"{path}/{_SIDECAR}"
-    pinned = _fs.read_text(spark, marker)
-    if pinned is None:
-        raise ValueError(f"no {_SIDECAR} sidecar at {path}; not a term index")
+    # heal a crashed prior compaction FIRST: the ORIGINAL (tombstones
+    # still active, readers correct) is what gets restored
+    _heal(spark, path)
+    pinned = _pinned_scheme(spark, path)
     idx = spark.read.parquet(path)
     compacted = _apply_deletes(spark, path, idx).distinct()
-    staging = f"{path}.compacting"
-    _fs.delete(spark, staging)
-    compacted.write.mode("overwrite").partitionBy("tb").parquet(staging)
     dl_path = f"{path}/_doclens"
-    if _fs.exists(spark, dl_path):
-        # fold the norms table the same way: tombstones applied,
-        # replayed-append duplicates collapsed
-        _apply_deletes(
-            spark, path, spark.read.parquet(dl_path).distinct()
-        ).write.mode("overwrite").parquet(f"{staging}/_doclens")
-    # persist the term dictionary (Lucene keeps one for the same
-    # reason): (term, doc_freq) folded from the compacted postings, so
-    # suggest_terms reads dictionary-sized data instead of re-deriving
-    # from all postings. Valid only while no NEW tombstones arrive —
-    # readers check for _deletes and fall back to derivation.
     doc_col = [c for c in compacted.columns if c not in ("term", "tb", "pos")][0]
-    (
-        compacted.select(doc_col, "term")
-        .distinct()
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).cast("long").alias("doc_freq"))
-        .write.mode("overwrite")
-        .parquet(f"{staging}/_termdict")
-    )
-    _fs.write_text(spark, f"{staging}/{_SIDECAR}", pinned)
-    old = f"{path}.old"
-    _fs.delete(spark, old)
-    if not _fs.rename(spark, path, old):
-        raise IOError(f"could not stage out {path}")
-    if not _fs.rename(spark, staging, path):
-        # restore the original so the index stays readable
-        _fs.rename(spark, old, path)
-        raise IOError(f"could not swap compacted index into {path}")
-    _fs.delete(spark, old)
+
+    def write(staging: str) -> None:
+        compacted.write.partitionBy("tb").parquet(staging)
+        if _fs.exists(spark, dl_path):
+            # fold the norms table the same way: tombstones applied,
+            # replayed-append duplicates collapsed
+            _apply_deletes(
+                spark, path, spark.read.parquet(dl_path).distinct()
+            ).write.parquet(f"{staging}/_doclens")
+        # persist the term dictionary (Lucene keeps one for the same
+        # reason): (term, doc_freq) folded from the compacted postings, so
+        # suggest_terms reads dictionary-sized data instead of re-deriving
+        # from all postings. Valid only while no NEW tombstones arrive —
+        # readers check for _deletes and fall back to derivation.
+        (
+            compacted.select(doc_col, "term")
+            .distinct()
+            .groupBy("term")
+            .agg(F.count(F.lit(1)).cast("long").alias("doc_freq"))
+            .write.parquet(f"{staging}/_termdict")
+        )
+        _fs.write_text(spark, f"{staging}/{_SIDECAR}", pinned)
+
+    _fs.swap_dir(spark, path, f"{path}.compacting", f"{path}.old", write)
 
 
 def search_phrase_indexed(
@@ -755,10 +741,7 @@ def term_index_stats(spark: SparkSession, path: str) -> DataFrame:
     a positional one. n_docs prefers the ``_doclens`` table (present
     on positional indexes; it also counts zero-token docs) and falls
     back to distinct posting ids."""
-    marker = f"{path}/{_SIDECAR}"
-    if not _fs.exists(spark, marker):
-        raise ValueError(f"no {_SIDECAR} sidecar at {path}; not a term index")
-    pinned = _fs.read_text(spark, marker)
+    pinned = _pinned_scheme(spark, path)
     buckets = int(pinned.split(":", 1)[0])
     positional = pinned.endswith(":pos")
     live = _apply_deletes(spark, path, spark.read.parquet(path))

@@ -134,37 +134,22 @@ def compact_snapshots(
       before the horizon now raise (their history is gone — that IS
       expiry, surfaced loudly rather than as silently wrong state).
 
-    Crash discipline (the serving-table staged-swap pattern): the base
-    writes to a dot-staging dir (invisible to partition discovery),
-    then swaps in as ``_snapshot=<upto>`` — old dirs are removed only
-    AFTER the swap, so a crash leaves either the original layout or a
+    Crash discipline (``fs.swap_dir``): the base writes to a
+    dot-staging dir (invisible to partition discovery), then swaps in
+    as ``_snapshot=<upto>`` — old dirs are removed only AFTER the swap,
+    so a crash leaves either the original layout or a
     compacted-plus-leftovers layout, both of which read correctly
     (the base subsumes any leftover earlier dir; re-running heals)."""
     from platypus_ingestion_plugins_spark.operators.cdc import last_wins
 
-    # Heal a crashed prior compaction FIRST (r12 review: the window
-    # between "old dir staged out" and "base renamed in" used to leave
-    # _snapshot=<upto> missing entirely — a silently wrong latest
-    # state with no recovery path). The park dir is the marker: if it
-    # exists and the live dir is gone, the crash hit mid-swap — put
-    # the ORIGINAL back (the staging dir's completeness is unknowable,
-    # so it is discarded, never promoted); if both exist, the swap
-    # completed and the park is garbage. Either way leftover staging
-    # is swept, so orphaned hidden dirs cannot accumulate across the
-    # early-return path either.
-    tmp_old = f"{path}/.compact-{upto}.old"
+    # Heal a crashed prior compaction FIRST: a crash between the two
+    # renames leaves _snapshot=<upto> missing entirely — a silently
+    # wrong latest state — so the parked ORIGINAL is put back, and
+    # leftover staging is swept on the early-return path too
+    park = f"{path}/.compact-{upto}.old"
     staging = f"{path}/.compact-{upto}.staging"
     live = f"{path}/{SNAPSHOT_COL}={upto}"
-    if fs.exists(spark, tmp_old):
-        if not fs.exists(spark, live):
-            if not fs.rename(spark, tmp_old, live):
-                raise IOError(
-                    f"crashed compaction at {path}: could not restore "
-                    f"{live} from {tmp_old}"
-                )
-        else:
-            fs.delete(spark, tmp_old)
-    fs.delete(spark, staging)
+    fs.heal_swap(spark, live, park, staging)
 
     snaps = snapshot_ids(spark, path)
     if upto not in snaps:
@@ -182,7 +167,6 @@ def compact_snapshots(
     # at its original max seq beats any folded-range leftover, and
     # apply_changelog drops it from materialized state as always.
     base = last_wins(log.drop(SNAPSHOT_COL), key, seq_col=seq_col)
-    base.write.mode("overwrite").parquet(staging)
     # Swap the <upto> dir FIRST, delete the earlier dirs AFTER: the
     # base subsumes every folded row, and a leftover earlier dir
     # coexisting with the base still reads correctly (last-wins
@@ -196,13 +180,7 @@ def compact_snapshots(
     # history is simply gone — a silently wrong latest state. A crash
     # anywhere here leaves a readable layout, and re-running the same
     # compaction heals it (base ∪ leftovers folds to the same base).
-    if not fs.rename(spark, live, tmp_old):
-        raise IOError(f"could not stage out {SNAPSHOT_COL}={upto}")
-    if not fs.rename(spark, staging, live):
-        # restore the original dir so the table stays readable
-        fs.rename(spark, tmp_old, live)
-        raise IOError(f"could not swap compacted base into {path}")
-    fs.delete(spark, tmp_old)
+    fs.swap_dir(spark, live, staging, park, base.write.parquet)
     for s in fold:
         if s != upto:
             fs.delete(spark, f"{path}/{SNAPSHOT_COL}={s}")

@@ -20,6 +20,7 @@ hot buckets ARE boilerplate; this probe is the calibration tool.
 Usage: python scripts/probe_band_cap.py [sf_dir] [threshold]
 """
 
+import inspect
 import os
 import sys
 
@@ -59,17 +60,22 @@ def main():
     ).localCheckpoint()
     n_pairs = pairs.count()
 
-    # the banded frame, exactly as lsh_candidate_pairs builds it
+    # the banded frame, exactly as lsh_candidate_pairs builds it, with
+    # the banding the pairs above were computed under
+    defaults = inspect.signature(dedup.minhash_lsh_dedup_pairs).parameters
+    num_hashes = defaults["num_hashes"].default
+    bands = defaults["bands"].default
+    rows = num_hashes // bands
     sh = dedup.cap_shingle_df(dedup.shingles(deduped, "text", "doc_id", 3), None)
-    sig = dedup.minhash_from_shingles(sh, "doc_id", 8)
+    sig = dedup.minhash_from_shingles(sh, "doc_id", num_hashes)
     banded = sig.select(
         "doc_id",
         F.posexplode(
             F.transform(
-                F.sequence(F.lit(0), F.lit(3)),
+                F.sequence(F.lit(0), F.lit(bands - 1)),
                 lambda b: F.struct(
                     b.alias("band"),
-                    F.to_json(F.slice(F.col("sig"), b * 2 + 1, 2)).alias("bucket"),
+                    F.to_json(F.slice(F.col("sig"), b * rows + 1, rows)).alias("bucket"),
                 ),
             )
         ).alias("p", "bb"),

@@ -1227,6 +1227,46 @@ def test_term_index_delete_validation_and_crash_heal(spark, tmp_path):
     assert not os.path.exists(f"{idx}.old")
 
 
+def test_term_index_writers_heal_parked_index(spark, tmp_path):
+    """A compaction crash between its two renames leaves the index
+    parked at ``<idx>.old``. An append or a tombstone written next must
+    restore the park before writing: one that recreated the live dir
+    instead would shadow the park, and the following compaction would
+    drop it with every earlier document."""
+    import os
+
+    from platypus_ingestion_plugins_spark.serving import text_index as TI
+
+    def build(tag):
+        docs = spark.createDataFrame(
+            [(1, "alpha beta"), (2, "beta gamma")], "doc_id long, text string"
+        )
+        idx = str(tmp_path / tag)
+        TI.build_term_index(docs, "text", "doc_id", idx, buckets=4)
+        os.rename(idx, f"{idx}.old")  # crash between the two renames
+        return idx
+
+    def beta(idx):
+        hits = TI.search_terms_indexed(spark, idx, ["beta"]).collect()
+        return sorted(r.doc_id for r in hits)
+
+    idx = build("append")
+    TI.build_term_index(
+        spark.createDataFrame([(3, "beta delta")], "doc_id long, text string"),
+        "text", "doc_id", idx, buckets=4, mode="append",
+    )
+    TI.compact_term_index(spark, idx)
+    assert beta(idx) == [1, 2, 3]
+    assert not os.path.exists(f"{idx}.old")
+
+    idx = build("delete")
+    TI.delete_docs(spark, idx, spark.createDataFrame([(1,)], "doc_id long"))
+    TI.compact_term_index(spark, idx)
+    assert beta(idx) == [2]
+    assert not os.path.exists(f"{idx}/_deletes")  # tombstone applied physically
+    assert not os.path.exists(f"{idx}.old")
+
+
 def test_phrase_slop_and_span_near(spark, tmp_path):
     """r14: PhraseQuery(slop=k) / SpanNearQuery from positional
     postings vs a brute-force Python oracle over the tokenized text —
